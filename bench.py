@@ -189,13 +189,6 @@ def main() -> None:
         ctrl_total += med
     control_ratio = round(ctrl_total / CONTROL_REF_TOTAL, 3)
 
-    # Optional per-query cache unwind (r13 verdict item 4): clearCache
-    # between queries so no query benefits from frames persisted by an
-    # EARLIER query in the same session. Default OFF — the driver's
-    # round-over-round comparison needs the unchanged methodology; flip
-    # on for storage-pressure / cold-path studies only.
-    clear_cache = os.environ.get("BENCH_CLEAR_CACHE", "0") == "1"
-
     def cached_bytes() -> int:
         # snapshot of bytes currently held by the block manager for
         # persisted RDDs (storage memory the bench session is carrying)
@@ -210,8 +203,6 @@ def main() -> None:
     t_cold: dict[str, float] = {}       # run-1: JIT + cold caches (r13 v.1)
     peak_cached = 0
     for name in HEADLINE:
-        if clear_cache:
-            spark.catalog.clearCache()
         ts = run_query(spark, name, sf_dir, runs=runs)
         steady = ts[1:] if len(ts) > 1 else ts  # drop the JIT-compile run
         timings[name] = round(statistics.median(steady), 3)
@@ -260,7 +251,6 @@ def main() -> None:
                 "sf": sf,
                 "control_ratio": control_ratio,
                 "control": ctrl_detail,
-                "clear_cache": clear_cache,
                 "peak_cached_bytes": peak_cached,
             }
         )

@@ -89,20 +89,6 @@ def event_ts(df: DataFrame, col: str = "ts"):
     return F.col(col)
 
 
-def nanos_to_ts(c):
-    """Convert a nanos-as-long column to a proper TimestampType.
-
-    EXACT integer division to micros — `(col / 1000).cast("long")` would
-    widen the epoch-nanos long to double (ulp ≈ 256 ns at ~1.7e18) and can
-    land on the wrong microsecond vs the integer `div` path the DuckDB
-    oracles use. Decimal division is exact and overflow-free here."""
-    from pyspark.sql import functions as F
-
-    col = F.col(c) if isinstance(c, str) else c
-    micros = (col.cast("decimal(38,0)") / F.lit(1000)).cast("long")
-    return F.timestamp_micros(micros)
-
-
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     """Read every table; lazy — nothing is scanned until an action runs."""
     return {name: table(spark, sf_dir, name) for name in TABLES}

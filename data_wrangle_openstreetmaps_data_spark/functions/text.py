@@ -45,11 +45,6 @@ def token_count(text: Column | str) -> Column:
     return F.size(tokens(text))
 
 
-def char_count(text: Column | str) -> Column:
-    c = F.col(text) if isinstance(text, str) else text
-    return F.length(c)
-
-
 def punct_ratio(text: Column | str) -> Column:
     """Fraction of characters that are not alphanumeric/space."""
     c = F.col(text) if isinstance(text, str) else text

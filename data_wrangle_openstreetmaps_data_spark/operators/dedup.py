@@ -285,6 +285,8 @@ def _class_keys(classes: DataFrame, key_col: str, extra_cols=()) -> DataFrame:
     ``xxhash64(key)`` means two DISTINCT keys collided at 64 bits — the
     guard raise_errors mid-query instead of silently merging classes,
     so the narrow-key members join is machine-checked, never assumed.
+    The guard lives in the ``_h`` join key itself, so no consumer that
+    joins on ``_h`` can prune it away, whatever columns it keeps.
     NULL keys are dropped, matching raw-key equi-join semantics.
     ``extra_cols`` are class-constant expressions (aggregated with min —
     all rows in a non-colliding group are the same class row)."""
@@ -298,7 +300,6 @@ def _class_keys(classes: DataFrame, key_col: str, extra_cols=()) -> DataFrame:
         *[F.min(n).alias(n) for n in names],
     )
     return agged.select(
-        "_h",
         F.when(
             F.col("_nc") > 1,
             F.raise_error(
@@ -309,8 +310,9 @@ def _class_keys(classes: DataFrame, key_col: str, extra_cols=()) -> DataFrame:
                 )
             ),
         )
-        .otherwise(F.col("rep"))
-        .alias("rep"),
+        .otherwise(F.col("_h"))
+        .alias("_h"),
+        "rep",
         *names,
     )
 
@@ -1006,8 +1008,9 @@ def embedding_near_dup_pairs(
         # the aggregate anyway for SRP bucketing) and stays a codegen
         # HashAggregate, whereas hash-key grouping puts min/max(array)
         # audit buffers into the aggregate and Spark demotes it to a
-        # SortAggregate (measured: scripts/ab_collapse_key.py — a sort
-        # + spill hazard at scale for zero byte savings). Collisions
+        # SortAggregate (measured by scripts/ab_collapse_key.py, in git
+        # history — a sort + spill hazard at scale for zero byte
+        # savings). Collisions
         # are machine-checked by _class_keys (raise, never merge).
         members = (
             df.filter(F.col(vec_col).isNotNull())

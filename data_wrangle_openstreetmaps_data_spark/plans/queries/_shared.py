@@ -165,7 +165,7 @@ def _mat(df: DataFrame) -> DataFrame:
     a correctness risk, and no _mat site sits inside a per-action
     iteration loop: q_bfs_frontier briefly violated that and measured
     2.4-2.7× slower than per-hop localCheckpoint — r14 verdict item 6,
-    scripts/ab_bfs_mat.py — so iterative loop state must use
+    scripts/ab_bfs_mat.py in git history — so iterative loop state must use
     localCheckpoint, never _mat). Same-session interleaved A/B at
     sf0.1: q_resource_allocation_capped 1.71→1.30, q_modularity
     1.62→1.45, q_max_concurrency 1.17→0.97, q_funnel_steps 0.54→0.49

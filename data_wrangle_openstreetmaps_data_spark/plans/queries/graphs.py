@@ -974,7 +974,7 @@ def q_bfs_frontier(spark: SparkSession, sf: str) -> DataFrame:
     prefix (the PageRank localCheckpoint discipline, bounded here at 3
     rounds). r14 (verdict item 6): the loop state originally used the
     lazy `_mat` persist — the one _mat site inside an iteration loop —
-    and the A/B (scripts/ab_bfs_mat.py, outputs asserted identical)
+    and the A/B (scripts/ab_bfs_mat.py in git history, outputs identical)
     measured the three forms at sf0.1: in-loop lazy persist 6.6-7.5 s
     (nested unfilled InMemoryRelations re-expand per hop and branches
     race to fill them), in-loop eager persist 14.7-17.5 s (one

@@ -262,9 +262,10 @@ def read_osm(spark: SparkSession, path: str,
     the analog of the reference's single iterparse stream filtered to
     node/way (openstreet_kolkata.py:153,334,466). Input may be a plain
     file/glob, a ``.bz2`` (in-scan codec), or a ``.zip`` (extract-once).
-    ``.pbf`` inputs route through the ``osmpbf`` DataSource (r11): ONE
-    planet.pbf fans out per blob instead of per file, and the
-    raw-elements schema is identical to the XML route (parity pinned by
+    ``.pbf`` inputs route through the ``osmpbf`` DataSource, the only
+    PBF reader: ONE planet.pbf fans out per blob instead of per file,
+    and the raw-elements schema is identical to the XML route (rows
+    pinned against the pure-Python ``pbf.decode_pbf_bytes`` in
     tests/test_pbf_datasource.py), so every downstream consumer —
     audits, reshape, wrangle_maps — is format-agnostic."""
     path = resolve_input(path)

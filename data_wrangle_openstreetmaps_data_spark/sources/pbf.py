@@ -15,23 +15,21 @@ which this environment doesn't ship) and exposes the result as the same
 raw-elements DataFrame schema as the XML source (``osm.read_osm``), so the
 whole downstream engine (audits, reshape, queries) is format-agnostic.
 
-Spark integration: ``spark.read.format("binaryFile")`` parallelizes across
-files; blob decode runs executor-side in ``mapInPandas`` (Arrow batches of
-file splits). Scale note: one huge planet.pbf is a single binaryFile row
-on THIS route — the splittable route is ``pbf_datasource.py`` (Spark 4
-Python DataSource, ``spark.read.format("osmpbf")``), whose partition
-planner indexes blob offsets driver-side and fans one file out across
-executors; blob independence makes that safe. The decoder itself is
-per-blob and shared by both routes.
+Framing is walked once, by ``walk_blobs`` over a seekable file, and each
+Blob payload is unpacked by ``decode_blob``; both the pure-Python
+``decode_pbf_bytes`` and the ``osmpbf`` DataSource (``pbf_datasource.py``,
+``spark.read.format("osmpbf")``, which fans one file out across executors
+by blob offset) go through them. Malformed framing and unsupported blob
+compression raise ``ValueError``; nothing is dropped silently.
 """
 
 from __future__ import annotations
 
+import io
 import struct
 import zlib
-from collections.abc import Iterator
-
-from pyspark.sql import DataFrame, SparkSession
+from collections.abc import Generator, Iterator
+from typing import BinaryIO
 
 # --- protobuf wire format (decode) -----------------------------------------
 
@@ -133,41 +131,60 @@ def _packed_varints_np(buf: bytes, signed: bool = False):
 # --- PBF blob framing -------------------------------------------------------
 
 
-def iter_blocks(data: bytes) -> Iterator[tuple[str, bytes]]:
-    """Yield (blob_type, raw PrimitiveBlock/HeaderBlock bytes)."""
-    pos = 0
-    n = len(data)
-    while pos + 4 <= n:
-        (hlen,) = struct.unpack_from(">I", data, pos)
-        pos += 4
-        if pos + hlen > n:
-            raise ValueError(
-                f"truncated PBF: BlobHeader of {hlen} bytes at offset {pos} "
-                f"exceeds file size {n}"
-            )
-        header = data[pos:pos + hlen]
-        pos += hlen
+BlobRange = tuple[int, int, str]  # (payload offset, payload length, blob type)
+
+
+def walk_blobs(f: BinaryIO, pos: int = 0) -> Generator[BlobRange, None, int]:
+    """Walk only the blob framing of a seekable file from ``pos``: per
+    blob, read the 4-byte header length and the BlobHeader (which
+    carries the payload size), then seek past the payload. Yields each
+    complete blob and returns the end of the last one; the walk stops at
+    a tail too short to frame a whole blob, so a half-appended blob is
+    simply not visible yet. The caller may read ``f`` between yields."""
+    size = f.seek(0, io.SEEK_END)
+    while pos + 4 <= size:
+        f.seek(pos)
+        (hlen,) = struct.unpack(">I", f.read(4))
+        if pos + 4 + hlen > size:
+            break
         btype, datasize = "", 0
-        for field, _, val in _fields(header):
+        for field, _, val in _fields(f.read(hlen)):
             if field == 1:
                 btype = val.decode()
             elif field == 3:
                 datasize = val
-        if pos + datasize > n:
-            raise ValueError(
-                f"truncated PBF: blob of {datasize} bytes at offset {pos} "
-                f"exceeds file size {n}"
-            )
-        blob = data[pos:pos + datasize]
-        pos += datasize
-        raw = None
-        for field, _, val in _fields(blob):
-            if field == 1:  # uncompressed
-                raw = val
-            elif field == 3:  # zlib_data
-                raw = zlib.decompress(val)
-        if raw is not None:
-            yield btype, raw
+        off = pos + 4 + hlen
+        if off + datasize > size:
+            break
+        yield off, datasize, btype
+        pos = off + datasize
+    return pos
+
+
+def iter_blobs(f: BinaryIO) -> Iterator[BlobRange]:
+    """Every blob of a whole PBF file; bytes left over after the last
+    complete blob raise instead of being dropped."""
+    size = f.seek(0, io.SEEK_END)
+    end = yield from walk_blobs(f)
+    if end != size:
+        raise ValueError(
+            f"truncated PBF: {size - end} bytes at offset {end} do not "
+            f"frame a complete blob (file size {size})"
+        )
+
+
+def decode_blob(blob: bytes) -> bytes:
+    """Blob proto → raw block bytes. Only ``raw`` (field 1) and
+    ``zlib_data`` (field 3) are decoded; any other payload (lzma, bzip2,
+    lz4, zstd: fields 4-7) raises rather than decoding to nothing."""
+    for field, _, val in _fields(blob):
+        if field == 1:
+            return val
+        if field == 3:
+            return zlib.decompress(val)
+        if field != 2:  # raw_size
+            raise ValueError(f"unsupported PBF blob compression: field {field}")
+    raise ValueError("unsupported PBF blob compression: no data field")
 
 
 # --- PrimitiveBlock decode --------------------------------------------------
@@ -438,9 +455,9 @@ def decode_primitive_block(raw: bytes) -> list[dict]:
 
 def decode_pbf_bytes(data: bytes) -> list[dict]:
     out: list[dict] = []
-    for btype, raw in iter_blocks(data):
+    for off, ln, btype in iter_blobs(io.BytesIO(data)):
         if btype == "OSMData":
-            out.extend(decode_primitive_block(raw))
+            out.extend(decode_primitive_block(decode_blob(data[off:off + ln])))
     return out
 
 
@@ -498,32 +515,3 @@ def elements_to_arrow(rows: list[dict], schema=None):
     import pyarrow as pa
 
     return pa.RecordBatch.from_pylist(rows, schema=schema or arrow_schema())
-
-
-def read_pbf(spark: SparkSession, path: str,
-             element_types: tuple[str, ...] = ("node", "way")) -> DataFrame:
-    """PBF → the engine's raw-elements DataFrame (same schema as
-    ``osm.read_osm``). Parallel across files; decode is executor-side."""
-    import pandas as pd
-
-    types = set(element_types)
-    files = spark.read.format("binaryFile").load(path).select("content")
-
-    def kernel(batches):
-        for pdf in batches:
-            rows = []
-            for blob in pdf["content"]:
-                rows.extend(
-                    r for r in decode_pbf_bytes(bytes(blob))
-                    if r["type"] in types
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "id", "type", "lat", "lon", "visible", "version",
-                    "changeset", "timestamp", "user", "uid", "tags", "nds",
-                    "members",
-                ],
-            )
-
-    return files.mapInPandas(kernel, RAW_DDL)

@@ -1,15 +1,12 @@
 """OSM PBF as a Spark 4 Python DataSource (``spark.read.format("osmpbf")``).
 
-Closes the scale caveat documented in ``sources/pbf.py``: the
-``binaryFile`` route hands ONE planet.pbf to ONE task, because a binary
-file is a single un-splittable row there. PBF itself is a sequence of
-independently-decodable blobs, so the right Spark shape is a custom
-source whose ``partitions()`` is a driver-side INDEX PASS over blob
-framing (seek + 4-byte length + BlobHeader per blob — no payload bytes
-are read, a few KB of I/O per ~8 MB blob) and whose ``read()`` decodes
-only its own blob ranges executor-side. One 100 TB file fans out across
-every executor, the same blob independence argument the pbf.py
-docstring makes — now implemented instead of promised.
+PBF is a sequence of independently-decodable blobs, so the Spark shape
+is a custom source whose ``partitions()`` is a driver-side INDEX PASS
+over blob framing (``pbf.walk_blobs``: seek + 4-byte length + BlobHeader
+per blob — no payload bytes are read, a few KB of I/O per ~8 MB blob)
+and whose ``read()`` decodes only its own blob ranges executor-side
+(``pbf.decode_blob``). One planet-sized file fans out across every
+executor instead of landing in one task.
 
 Reference parity: the reference streams one element at a time through
 SAX (openstreet_kolkata.py:60,90) and never parallelizes one file; this
@@ -25,9 +22,8 @@ partition planning logic is unchanged.
 from __future__ import annotations
 
 import glob as _glob
-import os
-import struct
 from dataclasses import dataclass
+from itertools import islice, takewhile
 
 from pyspark.sql.datasource import (
     DataSource,
@@ -38,10 +34,13 @@ from pyspark.sql.datasource import (
 
 from data_wrangle_openstreetmaps_data_spark.sources.pbf import (
     RAW_DDL,
-    _fields,
+    BlobRange,
     arrow_schema,
+    decode_blob,
     decode_primitive_block,
     elements_to_arrow,
+    iter_blobs,
+    walk_blobs,
 )
 
 
@@ -49,85 +48,11 @@ def _open(path: str):
     return open(path, "rb")
 
 
-def index_blobs(path: str) -> list[tuple[int, int, str]]:
-    """Walk ONLY the blob framing of one file: per blob, read the
-    4-byte header length + the BlobHeader (which carries the payload
-    size), then seek past the payload. Returns (offset, length, type)
-    of each raw Blob payload. I/O is O(#blobs) small reads."""
-    out: list[tuple[int, int, str]] = []
+def index_blobs(path: str) -> list[BlobRange]:
+    """(offset, length, type) of every blob of one whole file: O(#blobs)
+    small reads, no payload bytes. A truncated tail raises."""
     with _open(path) as f:
-        size = os.fstat(f.fileno()).st_size
-        pos = 0
-        while pos + 4 <= size:
-            head = f.read(4)
-            if len(head) < 4:
-                break
-            (hlen,) = struct.unpack(">I", head)
-            header = f.read(hlen)
-            if len(header) < hlen:
-                raise ValueError(f"truncated BlobHeader at {pos}")
-            btype, datasize = "", 0
-            for field, _, val in _fields(header):
-                if field == 1:
-                    btype = val.decode()
-                elif field == 3:
-                    datasize = val
-            blob_off = pos + 4 + hlen
-            if blob_off + datasize > size:
-                raise ValueError(f"truncated blob at {blob_off}")
-            out.append((blob_off, datasize, btype))
-            pos = blob_off + datasize
-            f.seek(pos)
-    return out
-
-
-def index_blobs_from(
-    path: str, start_pos: int
-) -> tuple[list[tuple[int, int, str]], int]:
-    """Streaming variant of ``index_blobs``: walk framing from
-    ``start_pos``, STOP (don't raise) at a truncated tail — a partially
-    appended blob simply isn't visible yet. Returns (blobs, next_pos)
-    where next_pos is the end of the last COMPLETE blob."""
-    out: list[tuple[int, int, str]] = []
-    with _open(path) as f:
-        size = os.fstat(f.fileno()).st_size
-        pos = start_pos
-        f.seek(pos)
-        while pos + 4 <= size:
-            head = f.read(4)
-            if len(head) < 4:
-                break
-            (hlen,) = struct.unpack(">I", head)
-            if pos + 4 + hlen > size:
-                break
-            header = f.read(hlen)
-            btype, datasize = "", 0
-            for field, _, val in _fields(header):
-                if field == 1:
-                    btype = val.decode()
-                elif field == 3:
-                    datasize = val
-            blob_off = pos + 4 + hlen
-            if blob_off + datasize > size:
-                break
-            out.append((blob_off, datasize, btype))
-            pos = blob_off + datasize
-            f.seek(pos)
-    return out, pos
-
-
-def _decode_blob(blob: bytes) -> bytes | None:
-    """Blob proto → raw PrimitiveBlock bytes (field 1 uncompressed,
-    field 3 zlib) — the same two encodings pbf.iter_blocks accepts."""
-    import zlib
-
-    raw = None
-    for field, _, val in _fields(blob):
-        if field == 1:
-            raw = val
-        elif field == 3:
-            raw = zlib.decompress(val)
-    return raw
+        return list(iter_blobs(f))
 
 
 @dataclass
@@ -180,10 +105,7 @@ class OsmPbfReader(DataSourceReader):
         with _open(partition.path) as f:
             for off, ln in partition.ranges:
                 f.seek(off)
-                raw = _decode_blob(f.read(ln))
-                if raw is None:
-                    continue
-                rows = decode_primitive_block(raw)
+                rows = decode_primitive_block(decode_blob(f.read(ln)))
                 if rows:
                     yield elements_to_arrow(rows, schema)
 
@@ -223,24 +145,21 @@ class OsmPbfStreamReader(SimpleDataSourceStreamReader):
                 if btype != "OSMData":
                     continue
                 f.seek(off)
-                raw = _decode_blob(f.read(ln))
-                if raw is None:
-                    continue
-                for el in decode_primitive_block(raw):
+                for el in decode_primitive_block(decode_blob(f.read(ln))):
                     out.append(tuple(el.get(c) for c in cols))
         return out
 
     def read(self, start: dict):
-        blobs, next_pos = index_blobs_from(self._path, start["pos"])
-        if self._max_blobs > 0 and len(blobs) > self._max_blobs:
-            blobs = blobs[: self._max_blobs]
-            last_off, last_len, _ = blobs[-1]
-            next_pos = last_off + last_len
+        cap = self._max_blobs if self._max_blobs > 0 else None
+        with _open(self._path) as f:
+            blobs = list(islice(walk_blobs(f, start["pos"]), cap))
+        next_pos = blobs[-1][0] + blobs[-1][1] if blobs else start["pos"]
         return iter(self._rows(blobs)), {"pos": next_pos}
 
     def readBetweenOffsets(self, start: dict, end: dict):
-        blobs, _ = index_blobs_from(self._path, start["pos"])
-        blobs = [b for b in blobs if b[0] < end["pos"]]
+        with _open(self._path) as f:
+            blobs = list(takewhile(lambda b: b[0] < end["pos"],
+                                   walk_blobs(f, start["pos"])))
         return iter(self._rows(blobs))
 
 

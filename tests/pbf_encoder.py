@@ -7,8 +7,12 @@ zigzag, packed + delta coding, string table, zlib blobs."""
 
 from __future__ import annotations
 
+import lzma
 import struct
 import zlib
+
+# Blob payload field -> its encoder: raw, zlib_data, lzma_data
+COMPRESSORS = {1: bytes, 3: zlib.compress, 4: lzma.compress}
 
 
 def _varint(n: int) -> bytes:
@@ -66,10 +70,11 @@ class StringTable:
         return b"".join(_ld(1, s.encode()) for s in self.strings)
 
 
-def encode_pbf(nodes=(), ways=(), relations=()) -> bytes:
+def encode_pbf(nodes=(), ways=(), relations=(), data_field: int = 3) -> bytes:
     """nodes: [{id, lat, lon, user, uid, version, changeset, timestamp_ms,
     tags: {k: v}}]; ways: [{id, refs: [...], tags, ...info}];
-    relations: [{id, members: [(type, ref, role)], tags, ...info}]."""
+    relations: [{id, members: [(type, ref, role)], tags, ...info}].
+    ``data_field`` picks the OSMData Blob payload field (``COMPRESSORS``)."""
     st = StringTable()
     groups = []
 
@@ -145,11 +150,10 @@ def encode_pbf(nodes=(), ways=(), relations=()) -> bytes:
     block = _ld(1, st.encode()) + b"".join(groups)
     # granularity/date_granularity defaults (100, 1000) — omitted
 
-    def blob(btype: str, raw: bytes) -> bytes:
-        z = zlib.compress(raw)
-        blob_msg = _vi(2, len(raw)) + _ld(3, z)
+    def blob(btype: str, raw: bytes, field: int = 3) -> bytes:
+        blob_msg = _vi(2, len(raw)) + _ld(field, COMPRESSORS[field](raw))
         header = _ld(1, btype.encode()) + _vi(3, len(blob_msg))
         return struct.pack(">I", len(header)) + header + blob_msg
 
     header_block = _ld(4, b"DenseNodes")  # required_features
-    return blob("OSMHeader", header_block) + blob("OSMData", block)
+    return blob("OSMHeader", header_block) + blob("OSMData", block, data_field)

@@ -1,5 +1,6 @@
-"""OSM PBF source: pure-decoder unit tests + Spark round-trip + the full
-reshape pipeline over PBF input (format parity with the XML path)."""
+"""OSM PBF source: pure-decoder unit tests + Spark round-trip through
+``osm.read_osm`` (the ``osmpbf`` DataSource) + the full reshape pipeline
+over PBF input (format parity with the XML path)."""
 
 from __future__ import annotations
 
@@ -8,7 +9,7 @@ import os
 import pytest
 
 from data_wrangle_openstreetmaps_data_spark.operators.reshape import shape_elements
-from data_wrangle_openstreetmaps_data_spark.sources import pbf
+from data_wrangle_openstreetmaps_data_spark.sources import osm, pbf
 from tests.pbf_encoder import encode_pbf
 
 TMP = os.path.join(os.path.dirname(__file__), "..", ".tmp")
@@ -87,17 +88,29 @@ def test_truncated_pbf_raises_clear_error(pbf_file):
     # cut mid-BlobHeader
     with pytest.raises(ValueError, match="truncated PBF"):
         pbf.decode_pbf_bytes(data[:6])
+    # 1-3 stray bytes after the last blob: too short for a length prefix
+    for tail in (b"\x00", b"\x00\x00", b"\x00\x00\x00"):
+        with pytest.raises(ValueError, match="truncated PBF"):
+            pbf.decode_pbf_bytes(data + tail)
+    # a spec-valid blob in a compression the decoder lacks (lzma_data)
+    with pytest.raises(ValueError,
+                       match="unsupported PBF blob compression: field 4"):
+        pbf.decode_pbf_bytes(encode_pbf(NODES, WAYS, RELATIONS, data_field=4))
+    # uncompressed ``raw`` blobs decode like zlib ones
+    assert pbf.decode_pbf_bytes(
+        encode_pbf(NODES, WAYS, RELATIONS, data_field=1)
+    ) == pbf.decode_pbf_bytes(data)
 
 
 def test_spark_read_pbf(spark, pbf_file):
-    df = pbf.read_pbf(spark, pbf_file, ("node", "way", "relation"))
+    df = osm.read_osm(spark, pbf_file, ("node", "way", "relation"))
     assert df.count() == 4
     types = {r["type"] for r in df.select("type").distinct().collect()}
     assert types == {"node", "way", "relation"}
 
 
 def test_pbf_feeds_reshape_pipeline(spark, pbf_file):
-    raw = pbf.read_pbf(spark, pbf_file)
+    raw = osm.read_osm(spark, pbf_file)
     docs = {r["id"]: r.asDict(recursive=True) for r in shape_elements(raw).collect()}
     assert docs["261114295"]["pos"] == pytest.approx(
         [41.9730791, -87.6866303], abs=1e-7
@@ -112,8 +125,6 @@ def test_pbf_feeds_reshape_pipeline(spark, pbf_file):
 def test_pbf_xml_format_parity(spark, pbf_file):
     """The same logical content through PBF and XML yields identical
     reshaped documents (ids, positions, tags)."""
-    from data_wrangle_openstreetmaps_data_spark.sources import osm
-
     xml_path = os.path.join(TMP, "parity.osm")
     with open(xml_path, "w") as f:
         f.write(
@@ -129,7 +140,7 @@ def test_pbf_xml_format_parity(spark, pbf_file):
         )
     via_xml = shape_elements(osm.read_osm(spark, xml_path, ("node",))).collect()[0]
     via_pbf = [
-        r for r in shape_elements(pbf.read_pbf(spark, pbf_file)).collect()
+        r for r in shape_elements(osm.read_osm(spark, pbf_file)).collect()
         if r["id"] == "2"
     ][0]
     assert via_xml["id"] == via_pbf["id"]

@@ -1,6 +1,7 @@
-"""osmpbf Python DataSource: blob-index partition planning + parity
-with the binaryFile/mapInPandas route, and the one-file fan-out that
-route cannot do (sources/pbf_datasource.py)."""
+"""osmpbf Python DataSource (sources/pbf_datasource.py), the engine's one
+PBF reader: blob-index partition planning, row parity with the
+pure-Python ``pbf.decode_pbf_bytes`` oracle, loud failure on malformed
+input, one-file fan-out across partitions and blob-log streaming."""
 
 from __future__ import annotations
 
@@ -27,7 +28,7 @@ def single_blob_file():
 @pytest.fixture(scope="module")
 def multi_blob_file():
     # three concatenated (header+data) segments = three OSMData blobs in
-    # ONE file — the planet.pbf shape the binaryFile route can't split
+    # ONE file — the planet.pbf shape a per-file reader can't split
     os.makedirs(TMP, exist_ok=True)
     path = os.path.join(TMP, "ds_multi.osm.pbf")
     batches = [
@@ -51,13 +52,13 @@ def test_index_blobs_walks_framing(single_blob_file):
     for off, ln, t in blobs:
         if t != "OSMData":
             continue
-        raw = pbf_datasource._decode_blob(data[off : off + ln])
+        raw = pbf.decode_blob(data[off : off + ln])
         rows.extend(pbf.decode_primitive_block(raw))
     whole = pbf.decode_pbf_bytes(data)
     assert rows == whole
 
 
-def test_datasource_parity_with_mapinpandas_route(spark, single_blob_file):
+def test_datasource_parity_with_pure_decoder(spark, single_blob_file):
     pbf_datasource.register(spark)
     ds = (
         spark.read.format("osmpbf")
@@ -65,15 +66,30 @@ def test_datasource_parity_with_mapinpandas_route(spark, single_blob_file):
         .orderBy("type", "id")
         .collect()
     )
-    ref = (
-        pbf.read_pbf(spark, single_blob_file,
-                     element_types=("node", "way", "relation"))
-        .orderBy("type", "id")
-        .collect()
-    )
-    assert [r.asDict(recursive=True) for r in ds] == [
-        r.asDict(recursive=True) for r in ref
-    ]
+    with open(single_blob_file, "rb") as f:
+        ref = sorted(pbf.decode_pbf_bytes(f.read()),
+                     key=lambda e: (e["type"], e["id"]))
+    assert [r.asDict(recursive=True) for r in ds] == ref
+
+
+def test_datasource_rejects_malformed_pbf(spark):
+    """Trailing bytes after the last blob fail partition planning, and an
+    unsupported blob compression fails the read — neither decodes to
+    fewer rows."""
+    pbf_datasource.register(spark)
+    os.makedirs(TMP, exist_ok=True)
+    cases = {
+        "ds_trailing.osm.pbf": (encode_pbf(NODES) + b"\x00\x00",
+                                "truncated PBF"),
+        "ds_lzma.osm.pbf": (encode_pbf(NODES, data_field=4),
+                            "unsupported PBF blob compression: field 4"),
+    }
+    for name, (data, error) in cases.items():
+        path = os.path.join(TMP, name)
+        with open(path, "wb") as f:
+            f.write(data)
+        with pytest.raises(Exception, match=error):
+            spark.read.format("osmpbf").load(path).collect()
 
 
 def test_one_file_fans_out_across_partitions(spark, multi_blob_file):
@@ -189,15 +205,16 @@ def test_streaming_backlog_capped_per_trigger(spark):
 def test_read_osm_dispatches_pbf_to_datasource(spark, single_blob_file):
     """osm.read_osm on a .pbf path must route through the osmpbf
     DataSource (r11) and return the same raw-elements rows the
-    mapInPandas route decodes — so wrangle_maps is format-agnostic."""
+    pure-Python decoder returns — so wrangle_maps is format-agnostic."""
     from data_wrangle_openstreetmaps_data_spark.sources import osm
 
     df = osm.read_osm(spark, single_blob_file)
-    via_kernel = pbf.read_pbf(spark, single_blob_file)
+    with open(single_blob_file, "rb") as f:
+        decoded = pbf.decode_pbf_bytes(f.read())
     got = {(r["id"], r["type"], r["user"]) for r in df.collect()}
     want = {
-        (r["id"], r["type"], r["user"])
-        for r in via_kernel.collect()
-        if r["type"] in ("node", "way")
+        (e["id"], e["type"], e["user"])
+        for e in decoded
+        if e["type"] in ("node", "way")
     }
     assert got == want and got

@@ -1,69 +1,39 @@
-"""Small-scale run of the reference-scale pipeline bench with --check:
-the generator tallies structural goldens while writing the corpus
-(distinct users, node/way split, top-k shop/highway orderings with
-deterministic ties, per-amenity counts — the invariant classes the
-reference publishes in README.md:128,138) and the pipeline must
-reproduce them exactly. The full-scale equivalent is
-``python scripts/bench_pipeline.py --check``."""
+"""``wrangle_maps`` reproduces the seeded corpus goldens on both ingest
+routes. One element stream (``perfbench.corpus``) is written as sharded
+XML and as one multi-blob ``.osm.pbf``; each is wrangled with both sinks,
+and every audit, every reference query and both sink row counts must
+match the goldens computed in plain Python from the stream (the
+invariant classes the reference publishes in README.md:128,138). The two
+routes must also agree with each other row for row."""
 
 from __future__ import annotations
 
-import json
-import os
-import subprocess
-import sys
+from perfbench import corpus, workloads
 
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+SEED, N_NODES, N_WAYS = 7, 2000, 400
 
 
-def test_pipeline_reproduces_generator_goldens():
-    env = dict(os.environ)
-    env["PIPELINE_BENCH_DIR"] = os.path.join(
-        REPO, ".tmp", "pipeline_bench_test"
-    )
-    proc = subprocess.run(
-        [sys.executable, "scripts/bench_pipeline.py", "4000", "400", "2",
-         "--check"],
-        cwd=REPO,
-        env=env,
-        capture_output=True,
-        text=True,
-        timeout=600,
-    )
-    assert proc.returncode == 0, (
-        f"--check failed\nstdout: {proc.stdout}\nstderr: {proc.stderr[-2000:]}"
-    )
-    assert "goldens: all invariants hold" in proc.stderr
-    out = json.loads(proc.stdout.strip().splitlines()[-1])
-    assert out["docs"] == 4400
+def _wrangle(spark, manifest: dict, work: str) -> tuple[dict, list[str]]:
+    out = workloads.Paths.under(work)
+    _, rows = workloads.run_wrangle(spark, manifest, out, workloads.SINKS)
+    expected = workloads.wrangle_checks(manifest, workloads.SINKS)
+    return rows, workloads.check(manifest, rows, expected, out)
 
 
-def test_check_goldens_detects_violation(tmp_path):
-    """check_goldens must actually FAIL on a wrong result, not vacuously
-    pass: feed it a doctored query output. Self-contained — generates its
-    own tiny corpus instead of depending on the other test's artifacts."""
-    sys.path.insert(0, os.path.join(REPO, "scripts"))
-    import bench_pipeline as bp
+def test_pipeline_reproduces_generator_goldens(spark, tmp_path):
+    xml = corpus.build(str(tmp_path / "xml"), SEED, N_NODES, N_WAYS,
+                       shards=2)
+    pbf = corpus.build(str(tmp_path / "pbf"), SEED, N_NODES, N_WAYS,
+                       per_blob=500)
+    assert xml["goldens"] == pbf["goldens"]
+    assert xml["elements"] == pbf["elements"] == N_NODES + N_WAYS
 
-    base = str(tmp_path / "goldens_corpus")
-    bp.generate(base, 200, 20, 1)
-    golden = json.load(open(os.path.join(base, "goldens.json")))
-    qout = {
-        "unique_users": [{"cnt": golden["distinct_users"] + 1}],
-        "type_counts": [
-            {"type": "node", "cnt": golden["n_nodes"]},
-            {"type": "way", "cnt": golden["n_ways"]},
-        ],
-        "top_shops": [
-            {"shop": s, "cnt": c} for s, c in golden["top_shops"]
-        ],
-        "top_highways": [
-            {"highway": h, "cnt": c} for h, c in golden["top_highways"]
-        ],
-        "amenity_counts": [
-            {"amenity": a, "cnt": c}
-            for a, c in golden["amenity_counts"].items()
-        ],
+    via_xml, failed_xml = _wrangle(spark, xml, str(tmp_path / "xml_run"))
+    via_pbf, failed_pbf = _wrangle(spark, pbf, str(tmp_path / "pbf_run"))
+    assert failed_xml == []
+    assert failed_pbf == []
+    # every golden was actually checked, on both routes
+    assert set(via_xml) == set(via_pbf) == set(xml["goldens"])
+    assert {k: corpus.fingerprint(v) for k, v in via_xml.items()} == {
+        k: corpus.fingerprint(v) for k, v in via_pbf.items()
     }
-    errs = bp.check_goldens(base, None, qout)
-    assert errs and "distinct_users" in errs[0]

@@ -83,6 +83,25 @@ def test_class_keys_raises_on_forced_collision(spark, monkeypatch):
         ckeys.collect()
 
 
+def test_class_keys_guard_survives_column_pruning(spark, monkeypatch):
+    """The guard sits in the ``_h`` join key, so a consumer that keeps
+    only ``_h`` (a semi-join-style caller) cannot prune it away."""
+    classes = spark.createDataFrame(
+        [("alpha", 1, 2), ("beta", 3, 1)], ["_nt", "rep", "csize"]
+    )
+    plan = (
+        dedup._class_keys(classes, "_nt")
+        .select("_h")
+        ._jdf.queryExecution()
+        .optimizedPlan()
+        .toString()
+    )
+    assert "raise_error(" in plan
+    monkeypatch.setattr(dedup, "_class_hash", lambda col: F.lit(7).cast("long"))
+    with pytest.raises(Exception, match="collision"):
+        dedup._class_keys(classes, "_nt").select("_h").collect()
+
+
 def test_class_keys_drops_null_keys(spark):
     """NULL class keys never join in the raw-key form (SQL equality);
     the hash form must preserve that by filtering them out."""
