@@ -2,8 +2,9 @@
 
 The reference's ``shape_element`` (openstreet_kolkata.py:463-537; spec in
 its docstring :364-449) converts one XML element dict at a time. Here the
-whole reshape is ONE ``select`` of native column expressions over a
-DataFrame with the raw schema (FIXTURES.md §1/§2):
+reshape is native column expressions over a DataFrame with the raw
+schema (FIXTURES.md §1/§2): the clean step (``clean_tags``) as a few
+narrow projections, then the shape as one ``select``:
 
     id, lat, lon, visible, version, changeset, timestamp, user, uid: string
     type: string ('node'|'way')
@@ -22,15 +23,17 @@ Implementation notes:
 - R5 node_refs: ordered refs from nd children (:523-526) — document order
   is preserved because the array column preserves element order; no sort,
   no window, no shuffle.
-- R6 cleaning fused in (clean_address is invoked per element during reshape,
+- R6 cleaning first (clean_address is invoked per element during reshape,
   :496): street/city values normalized, extracted house numbers lifted into
   address['housenumber'] (overwriting an existing one, :318-325 intent).
+  Each cleaning intermediate is its own projected column, so the shape's
+  several reads of the tags never copy the cleaning expressions.
 - Validity gate (is_valid, :455-461): the reference's node/way check is a
   tautology bug; the intent — keep only node/way elements that have a user —
   is implemented.
 
 The whole thing is narrow (no shuffle at all): at 100 TB this reshape is a
-single map stage fused into the scan by whole-stage codegen.
+single map stage; the projections are evaluated row by row in one task.
 """
 
 from __future__ import annotations
@@ -49,42 +52,15 @@ from data_wrangle_openstreetmaps_data_spark.functions.cleaning import (
 CREATED_FIELDS = ("version", "changeset", "timestamp", "user", "uid")
 
 
-def _clean_tag_entries(tags: Column) -> Column:
-    """Apply clean_address semantics (openstreet_kolkata.py:305-326) to a
-    tags array: fix street values (type normalize + housenumber split),
-    fix city values, and append a lifted addr:housenumber entry when a
-    street value contained one."""
-    # last addr:street value (dict last-wins semantics; no map build, so
-    # duplicate keys can't trip the session's mapKeyDedupPolicy)
-    street_val = F.try_element_at(
-        F.filter(tags, lambda t: t["k"] == F.lit("addr:street")), F.lit(-1)
-    )["v"]
-    norm_street = normalize_street_type(street_val)
-    lifted_housenum, fixed_street = split_housenumber(norm_street)
+def _or_empty(tags: Column) -> Column:
+    return F.coalesce(tags, F.array().cast("array<struct<k:string,v:string>>"))
 
-    def fix_value(t: Column) -> Column:
-        return F.struct(
-            t["k"].alias("k"),
-            F.when(t["k"] == "addr:street", fixed_street)
-            .when(t["k"] == "addr:city", fix_city_name(t["v"]))
-            .otherwise(t["v"])
-            .alias("v"),
-        )
 
-    cleaned = F.transform(tags, fix_value)
-    # Lift extracted house number: drop any pre-existing housenumber entry,
-    # then append the lifted one (reference intent :318-325 — overwrite).
-    without_hn = F.filter(cleaned, lambda t: t["k"] != F.lit("addr:housenumber"))
-    existing_hn = F.filter(cleaned, lambda t: t["k"] == F.lit("addr:housenumber"))
-    hn_entry = F.array(
-        F.struct(
-            F.lit("addr:housenumber").alias("k"), lifted_housenum.alias("v")
-        )
-    )
-    return (
-        F.when(lifted_housenum.isNotNull(), F.concat(without_hn, hn_entry))
-        .otherwise(F.concat(without_hn, existing_hn))
-    )
+# clean_tags' intermediate columns, one projection each; dropped on return
+_STREET = "_clean_street"
+_NORM_STREET = "_clean_norm_street"
+_HOUSENUM = "_clean_housenum"
+_STREET_REST = "_clean_street_rest"
 
 
 def _entries_last_wins(entries: Column) -> Column:
@@ -103,13 +79,58 @@ def _entries_last_wins(entries: Column) -> Column:
 
 
 def clean_tags(df: DataFrame, tags_col: str = "tags") -> DataFrame:
-    """Standalone clean phase (clean_addresses, openstreet_kolkata.py:356-359):
-    returns the frame with its tags column cleaned in place, so audits can
-    run over post-clean values (audit_clean_addresses cleanup=True path)."""
-    tags = F.coalesce(
-        F.col(tags_col), F.array().cast("array<struct<k:string,v:string>>")
+    """clean_address semantics (openstreet_kolkata.py:305-326) over a tags
+    array: fix the street value (type normalize + house-number split), fix
+    city values, and lift an extracted house number into
+    addr:housenumber. Also the standalone clean phase (clean_addresses,
+    :356-359), so audits can run over post-clean values
+    (audit_clean_addresses cleanup=True path).
+
+    Each intermediate is its own projection, referenced by name from the
+    next: the last addr:street value, its normalized form, then the
+    (house number, remainder) pair. An intermediate read more than once
+    is not cheap to inline, so CollapseProject keeps it a column instead
+    of copying its expression into every consumer. The tags column comes
+    back cleaned in place; the intermediates are dropped."""
+    tags = F.col(tags_col)
+
+    def fix_value(t: Column) -> Column:
+        return F.struct(
+            t["k"].alias("k"),
+            F.when(t["k"] == "addr:street", F.col(_STREET_REST))
+            .when(t["k"] == "addr:city", fix_city_name(t["v"]))
+            .otherwise(t["v"])
+            .alias("v"),
+        )
+
+    staged = (
+        df.withColumn(tags_col, _or_empty(tags))
+        # last addr:street value (dict last-wins semantics; no map build,
+        # so duplicate keys can't trip the session's mapKeyDedupPolicy)
+        .withColumn(_STREET, F.try_element_at(
+            F.filter(tags, lambda t: t["k"] == F.lit("addr:street")),
+            F.lit(-1),
+        )["v"])
+        .withColumn(_NORM_STREET, normalize_street_type(F.col(_STREET)))
+        .withColumns(dict(zip(
+            (_HOUSENUM, _STREET_REST), split_housenumber(F.col(_NORM_STREET))
+        )))
+        .withColumn(tags_col, F.transform(tags, fix_value))
     )
-    return df.withColumn(tags_col, _clean_tag_entries(tags))
+    # Lift the extracted house number: drop any pre-existing housenumber
+    # entry, then append the lifted one (reference intent :318-325 —
+    # overwrite).
+    lifted = F.col(_HOUSENUM)
+    without_hn = F.filter(tags, lambda t: t["k"] != F.lit("addr:housenumber"))
+    existing_hn = F.filter(tags, lambda t: t["k"] == F.lit("addr:housenumber"))
+    hn_entry = F.array(
+        F.struct(F.lit("addr:housenumber").alias("k"), lifted.alias("v"))
+    )
+    return staged.withColumn(
+        tags_col,
+        F.when(lifted.isNotNull(), F.concat(without_hn, hn_entry))
+        .otherwise(F.concat(without_hn, existing_hn)),
+    ).drop(_STREET, _NORM_STREET, _HOUSENUM, _STREET_REST)
 
 
 def shape_elements(
@@ -118,10 +139,15 @@ def shape_elements(
     tags_col: str = "tags",
     nds_col: str | None = "nds",
 ) -> DataFrame:
-    """Vectorized shape_element over a raw elements DataFrame."""
-    tags = F.coalesce(F.col(tags_col), F.array().cast("array<struct<k:string,v:string>>"))
+    """Vectorized shape_element over a raw elements DataFrame; ``clean``
+    first runs :func:`clean_tags` (clean_address inside shape_element,
+    :496), so the select below reads the cleaned tags as one column."""
     if clean:
-        tags = _clean_tag_entries(tags)
+        # clean_tags already replaced a null tags list with []
+        df = clean_tags(df, tags_col)
+        tags = F.col(tags_col)
+    else:
+        tags = _or_empty(F.col(tags_col))
 
     # problemchars keys are ignored everywhere (:503-504)
     ok = F.filter(tags, lambda t: ~t["k"].rlike(PROBLEMCHARS_RE))

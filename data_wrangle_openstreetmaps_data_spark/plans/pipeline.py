@@ -5,12 +5,14 @@ Reference shape: 6 sequential full re-parses of the same XML file (4
 audits + clean + reshape), driver-side dict accumulators, then row-at-a-
 time Mongo inserts and server-side query pipelines (SURVEY.md §3.1).
 
-Spark shape: ONE cached raw-elements DataFrame feeds every audit; clean +
-reshape is a single narrow ``select`` (no shuffle); sinks are bulk writes;
-queries are DataFrame aggregations on the reshaped store. ``df.cache()``
-replaces the 6-scan pattern — at 100 TB you'd swap cache() for a
-persisted bronze table, which is the same plan with a different storage
-level.
+Spark shape: ONE cached raw-elements DataFrame feeds every audit. The
+clean step is a few narrow projections (``clean_tags``), built once and
+shared by the post-clean audits and the reshape; the reshape is one
+narrow ``select`` over the cleaned tags (no shuffle). Sinks are bulk
+writes; queries are DataFrame aggregations on the reshaped store.
+``df.cache()`` replaces the 6-scan pattern — at 100 TB you'd swap
+cache() for a persisted bronze table, which is the same plan with a
+different storage level.
 """
 
 from __future__ import annotations
@@ -21,6 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from data_wrangle_openstreetmaps_data_spark.operators import audit as audit_ops
+from data_wrangle_openstreetmaps_data_spark.operators import reshape
 from data_wrangle_openstreetmaps_data_spark.operators.reshape import shape_elements
 from data_wrangle_openstreetmaps_data_spark.operators.topk import topk_group_count
 from data_wrangle_openstreetmaps_data_spark.sources import json_sink, osm
@@ -36,6 +39,14 @@ class WrangleResult:
     queries: dict[str, DataFrame] = field(default_factory=dict)
 
 
+def _tag_rows(df: DataFrame) -> DataFrame:
+    """(type, k, v), one row per tag; an element without tags keeps one
+    row with null k and v."""
+    return df.select("type", F.explode_outer("tags").alias("t")).select(
+        "type", F.col("t.k").alias("k"), F.col("t.v").alias("v")
+    )
+
+
 def wrangle_maps(
     spark: SparkSession,
     osm_path: str,
@@ -45,9 +56,7 @@ def wrangle_maps(
     """audit → clean+reshape → sink → query, one cached scan."""
     raw = osm.read_osm(spark, osm_path).cache()
 
-    exploded_tags = raw.select(
-        "type", F.explode_outer("tags").alias("t")
-    ).select("type", F.col("t.k").alias("k"), F.col("t.v").alias("v"))
+    exploded_tags = _tag_rows(raw)
 
     audits = {
         # audit_tags (openstreet_kolkata.py:97-101)
@@ -77,13 +86,10 @@ def wrangle_maps(
     }
 
     # clean phase (openstreet_kolkata.py:665): audits re-run over cleaned
-    # values — the reference re-parses + re-cleans; here it's the same
-    # cached scan with the cleaning expression applied
-    from data_wrangle_openstreetmaps_data_spark.operators.reshape import clean_tags
-
-    cleaned_tags = clean_tags(raw).select(
-        "type", F.explode_outer("tags").alias("t")
-    ).select("type", F.col("t.k").alias("k"), F.col("t.v").alias("v"))
+    # values — the reference re-parses + re-cleans; here the cleaned frame
+    # is built once over the cached scan and the reshape reuses it
+    cleaned = reshape.clean_tags(raw)
+    cleaned_tags = _tag_rows(cleaned)
     audits["street_types_after_clean"] = audit_ops.audit_street_types(
         cleaned_tags.filter(F.col("k") == "addr:street").select(
             F.col("v").alias("street")
@@ -95,7 +101,7 @@ def wrangle_maps(
         )
     )
 
-    docs = shape_elements(raw, clean=True)
+    docs = shape_elements(cleaned, clean=False)
 
     if out_json:
         json_sink.write_json(docs, out_json)

@@ -231,9 +231,12 @@ def _decode_dense_nodes(dense: bytes, strings: list[str], gran: int,
 
     ids_a = np.cumsum(ids)
     # numpy float64 str() is the same shortest-round-trip repr CPython uses,
-    # so these strings parse back to the identical doubles
-    lat_l = _pad((1e-9 * (lat_off + gran * np.cumsum(lats))).astype("U32").tolist())
-    lon_l = _pad((1e-9 * (lon_off + gran * np.cumsum(lons))).astype("U32").tolist())
+    # so these strings parse back to the identical doubles. Dividing the
+    # exact nanodegree count by 1e9 rounds once, to the double nearest the
+    # decimal coordinate, as parsing the XML attribute does; multiplying
+    # by the inexact 1e-9 could land one ulp off (22.649388300000002).
+    lat_l = _pad(((lat_off + gran * np.cumsum(lats)) / 1e9).astype("U32").tolist())
+    lon_l = _pad(((lon_off + gran * np.cumsum(lons)) / 1e9).astype("U32").tolist())
     id_l = ids_a.astype("U24").tolist()
 
     def _str_col(key, delta=True):

@@ -143,6 +143,38 @@ def test_wrangle_pipeline_end_to_end(spark, osm_file):
     assert json_sink.read_store(spark, out_store).count() == 6
 
 
+def test_reshape_is_built_once_over_the_cleaned_frame(spark, osm_file,
+                                                     monkeypatch):
+    # one wrangle plans the reshape once, over the frame the post-clean
+    # audits already cleaned, with or without sinks
+    from data_wrangle_openstreetmaps_data_spark.plans import pipeline
+
+    calls = []
+    real = pipeline.shape_elements
+
+    def counting(*a, **kw):
+        calls.append(kw.get("clean", True))
+        return real(*a, **kw)
+
+    monkeypatch.setattr(pipeline, "shape_elements", counting)
+
+    res = wrangle_maps(spark, osm_file)
+    assert calls == [False]
+    assert res.docs.count() == 6
+    assert res.queries["unique_users"].first()["cnt"] == 4
+    assert calls == [False]
+
+    calls.clear()
+    out_json = os.path.join(TMP, "once_docs_json")
+    out_store = os.path.join(TMP, "once_docs_store")
+    res = wrangle_maps(spark, osm_file, out_json=out_json, out_store=out_store)
+    assert calls == [False]
+    assert res.queries["unique_users"].first()["cnt"] == 4
+    assert json_sink.read_json(spark, out_json).count() == 6
+    assert json_sink.read_store(spark, out_store).count() == 6
+    assert calls == [False]
+
+
 def test_resolve_refs_join(spark, osm_file):
     # EXT-J1 on real OSM-shaped data: way refs resolved to node positions
     from data_wrangle_openstreetmaps_data_spark.operators.join import resolve_refs

@@ -4,10 +4,14 @@ XML and as one multi-blob ``.osm.pbf``; each is wrangled with both sinks,
 and every audit, every reference query and both sink row counts must
 match the goldens computed in plain Python from the stream (the
 invariant classes the reference publishes in README.md:128,138). The two
-routes must also agree with each other row for row."""
+routes must also agree with each other row for row: every audit and
+query, and the raw frame and the reshaped docs themselves."""
 
 from __future__ import annotations
 
+from pyspark.sql import functions as F
+
+from data_wrangle_openstreetmaps_data_spark.plans import pipeline
 from perfbench import corpus, workloads
 
 SEED, N_NODES, N_WAYS = 7, 2000, 400
@@ -18,6 +22,19 @@ def _wrangle(spark, manifest: dict, work: str) -> tuple[dict, list[str]]:
     _, rows = workloads.run_wrangle(spark, manifest, out, workloads.SINKS)
     expected = workloads.wrangle_checks(manifest, workloads.SINKS)
     return rows, workloads.check(manifest, rows, expected, out)
+
+
+def _raw_and_docs(spark, manifest: dict) -> tuple[list, list]:
+    """The raw frame and the docs of a no-sink wrangle, sorted by
+    (type, id). Raw coordinates are compared as doubles: the XML route
+    keeps the attribute text ("88.5566100"), a PBF has none."""
+    res = pipeline.wrangle_maps(spark, manifest["source"])
+    raw = res.raw.withColumns(
+        {c: F.col(c).cast("double") for c in ("lat", "lon")})
+    return tuple(
+        [r.asDict(recursive=True) for r in df.orderBy("type", "id").collect()]
+        for df in (raw, res.docs)
+    )
 
 
 def test_pipeline_reproduces_generator_goldens(spark, tmp_path):
@@ -37,3 +54,15 @@ def test_pipeline_reproduces_generator_goldens(spark, tmp_path):
     assert {k: corpus.fingerprint(v) for k, v in via_xml.items()} == {
         k: corpus.fingerprint(v) for k, v in via_pbf.items()
     }
+
+
+def test_xml_and_pbf_routes_agree_row_for_row(spark, tmp_path):
+    xml = corpus.build(str(tmp_path / "xml"), SEED, N_NODES, N_WAYS,
+                       shards=2)
+    pbf = corpus.build(str(tmp_path / "pbf"), SEED, N_NODES, N_WAYS,
+                       per_blob=500)
+    raw_xml, docs_xml = _raw_and_docs(spark, xml)
+    raw_pbf, docs_pbf = _raw_and_docs(spark, pbf)
+    assert len(raw_xml) == len(docs_xml) == N_NODES + N_WAYS
+    assert raw_xml == raw_pbf
+    assert docs_xml == docs_pbf

@@ -68,6 +68,26 @@ def test_reshape_is_narrow(spark):
     assert "Exchange" not in plan
 
 
+def test_clean_is_staged_not_inlined(spark):
+    # the clean step's intermediates are projected once each; inlining
+    # them into every consumer grew the plan ~80x and planning by seconds
+    from tests.test_reshape import RAW_SCHEMA, _raw
+    from data_wrangle_openstreetmaps_data_spark.operators.reshape import (
+        shape_elements,
+    )
+
+    df = spark.createDataFrame(
+        [_raw(id="1", type="node", user="u", tags=[])], RAW_SCHEMA
+    )
+    clean = shape_elements(df, clean=True)._jdf.queryExecution()
+    plain = shape_elements(df, clean=False)._jdf.queryExecution()
+    assert len(clean.analyzed().toString()) <= 3 * len(
+        plain.analyzed().toString()
+    )
+    # CollapseProject must not re-inline the staged columns
+    assert clean.optimizedPlan().toString().count("regexp_extract") <= 16
+
+
 def test_broadcast_mapping_join_equals_literal_form(spark):
     from data_wrangle_openstreetmaps_data_spark.functions import cleaning
     from data_wrangle_openstreetmaps_data_spark.plans.introspect import (

@@ -149,6 +149,94 @@ def test_fix_city_matches_python_model(spark, cities):
         assert got[c] == py_fix_city(c), repr(c)
 
 
+def py_clean_address(tags: list) -> list:
+    """clean_address over a tag list: every addr:street value becomes the
+    fixed form of the last one, cities are mapped, and a house number
+    lifted from the street replaces any addr:housenumber entry (without
+    one, existing addr:housenumber entries move to the end)."""
+    streets = [v for k, v in tags if k == "addr:street"]
+    hn = fixed = None
+    if streets and streets[-1] is not None:
+        hn, fixed = py_fix_street(streets[-1])
+
+    def fix(k, v):
+        if k == "addr:street":
+            return fixed
+        if k == "addr:city" and v is not None:
+            return py_fix_city(v)
+        return v
+
+    cleaned = [(k, fix(k, v)) for k, v in tags]
+    rest = [e for e in cleaned if e[0] != "addr:housenumber"]
+    if hn is not None:
+        return rest + [("addr:housenumber", hn)]
+    return rest + [e for e in cleaned if e[0] == "addr:housenumber"]
+
+
+def py_shape_tags(tags: list) -> tuple[dict | None, dict | None]:
+    """shape_element's (address, tags): problemchars keys ignored, addr:
+    stripped, addr:x:y dropped, last value wins, empty maps are absent."""
+    address: dict = {}
+    residual: dict = {}
+    for k, v in tags:
+        if _PROBLEM.search(k):
+            continue
+        if k.startswith("addr:"):
+            sub = k[len("addr:"):]
+            if not _LOWER_COLON.search(sub):
+                address[sub] = v
+        else:
+            residual[k] = v
+    return address or None, residual or None
+
+
+TAG_KEYS = st.one_of(
+    st.sampled_from(
+        ["addr:street", "addr:street", "addr:housenumber", "addr:city",
+         "addr:street:name", "addr:postcode", "addr:", "addr:full name",
+         "name", "name:en", "shop", "amenity", "x=y", "note here"]
+    ),
+    st.text(alphabet=KEY_ALPHABET, max_size=8),
+)
+TAG_VALUES = st.one_of(
+    st.none(),
+    st.lists(STREET_WORDS, min_size=1, max_size=3).map(" ".join),
+    st.sampled_from(["kolkata", "Salt Lake", "saltlake x", "dum dum cantt",
+                     "Bamangachi", "Paris", ""]),
+    st.text(alphabet=STREET_ALPHABET, max_size=10),
+)
+
+
+@given(st.lists(
+    st.one_of(st.none(), st.lists(st.tuples(TAG_KEYS, TAG_VALUES),
+                                  max_size=8)),
+    min_size=1, max_size=8,
+))
+def test_clean_reshape_matches_python_model(spark, tag_lists):
+    """shape_elements(clean=True)'s address and tags maps equal the
+    plain-Python clean_address + shape_element model."""
+    from pyspark.sql import Row
+
+    from data_wrangle_openstreetmaps_data_spark.operators.reshape import (
+        shape_elements,
+    )
+    from tests.test_reshape import RAW_SCHEMA, _raw
+
+    df = spark.createDataFrame(
+        [_raw(id=str(i), type="node", user="u",
+              tags=None if tags is None else [Row(k=k, v=v) for k, v in tags])
+         for i, tags in enumerate(tag_lists)],
+        RAW_SCHEMA,
+    )
+    got = {
+        r["id"]: (r["address"], r["tags"])
+        for r in shape_elements(df, clean=True).collect()
+    }
+    for i, tags in enumerate(tag_lists):
+        want = py_shape_tags(py_clean_address(tags or []))
+        assert got[str(i)] == want, tags
+
+
 @given(
     st.lists(
         st.floats(
