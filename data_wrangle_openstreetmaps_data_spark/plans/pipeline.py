@@ -116,34 +116,39 @@ def wrangle_maps(
     # shape: analytics read the silver table, not the ingest expression.
     docs_q = json_sink.read_store(spark, out_store) if out_store else docs
 
-    tags_map = F.col("tags")  # noqa: E501  (queries below mirror query_data)
-    queries = {
-        # query_data (openstreet_kolkata.py:596-655)
-        "unique_users": audit_ops.distinct_count(docs_q, "created.user"),
-        "type_counts": docs_q.groupBy("type").agg(
+    return WrangleResult(raw=raw, docs=docs, audits=audits,
+                         queries=store_queries(docs_q))
+
+
+def store_queries(docs: DataFrame) -> dict[str, DataFrame]:
+    """The reference's five report queries over the reshaped docs, by
+    name (query_data, openstreet_kolkata.py:596-655)."""
+    tags = F.col("tags")
+    return {
+        "unique_users": audit_ops.distinct_count(docs, "created.user"),
+        "type_counts": docs.groupBy("type").agg(
             F.count(F.lit(1)).alias("cnt")
         ),
-        "amenity_counts": docs_q.groupBy(
-            tags_map.getItem("amenity").alias("amenity")
+        "amenity_counts": docs.groupBy(
+            tags.getItem("amenity").alias("amenity")
         ).agg(F.count(F.lit(1)).alias("cnt")),
         "top_shops": topk_group_count(
-            docs_q.filter(F.col("type") == "node").select(
-                tags_map.getItem("shop").alias("shop")
+            docs.filter(F.col("type") == "node").select(
+                tags.getItem("shop").alias("shop")
             ),
             "shop",
             k=10,
             require_col="shop",
         ),
         "top_highways": topk_group_count(
-            docs_q.filter(F.col("type") == "way").select(
-                tags_map.getItem("highway").alias("highway")
+            docs.filter(F.col("type") == "way").select(
+                tags.getItem("highway").alias("highway")
             ),
             "highway",
             k=10,
             require_col="highway",
         ),
     }
-    return WrangleResult(raw=raw, docs=docs, audits=audits, queries=queries)
 
 
 def main(argv: list[str] | None = None) -> None:

@@ -10,10 +10,30 @@ inserts into MongoDB (insert_maps, :587-593). Spark-side:
 - ``write_store``: parquet is the idiomatic analytical store standing in
   for the MongoDB collection; a partitionBy on element type mirrors the
   type-filtered access pattern of every downstream query.
+- ``read_store``: the reference queries one collection that stays open
+  (query_data, :596-655). Opening a parquet store lists its files and
+  infers its schema from a footer, so a session keeps one open handle
+  per store path and reuses it.
+
+Freshness contract: a store is a Spark-committed directory, one whose
+root holds the ``_SUCCESS`` marker a Spark write leaves. Every
+``read_store`` call revalidates the session's handle against one
+listing of the store root (entry names, modification times, lengths,
+``_SUCCESS`` included) and reopens the store on any difference, so a
+rewrite through Spark, here or in another process, is seen by the next
+call. ``write_store`` and ``compact_store`` drop the handles of their
+path before they write. A root without ``_SUCCESS`` gets no handle and
+is opened fresh on every call: a writer outside Spark must leave
+``_SUCCESS`` when it is done, or its store is never cached, and it must
+not rewrite a file in place under a partition directory, which the root
+listing cannot see.
 """
 
 from __future__ import annotations
 
+from dataclasses import dataclass
+
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -56,8 +76,40 @@ def read_json(spark: SparkSession, path: str, pretty: bool = False) -> DataFrame
     return spark.read.json(objs.rdd.map(lambda r: r.value))
 
 
+@dataclass(frozen=True)
+class _Handle:
+    """An open store: the Hadoop path and file system of its root, the
+    root's commit state when it was opened, and the opened frame."""
+
+    root: object
+    fs: object
+    state: tuple
+    df: DataFrame
+
+
+# store path -> session -> handle. A stopped session's handles stay
+# here, unreachable, until their path is written again.
+_HANDLES: dict[str, dict[SparkSession, _Handle]] = {}
+
+
+def _commit_state(fs, root) -> tuple | None:
+    """(name, modification time, length) of every entry of the store
+    root, or None when the root cannot be listed or has no ``_SUCCESS``
+    (an uncommitted store, which is never cached)."""
+    try:
+        statuses = fs.listStatus(root)
+    except Py4JJavaError:
+        return None
+    state = tuple(sorted(
+        (s.getPath().getName(), s.getModificationTime(), s.getLen())
+        for s in statuses
+    ))
+    return state if any(e[0] == "_SUCCESS" for e in state) else None
+
+
 def write_store(df: DataFrame, path: str, partition_by: str | None = "type",
                 mode: str = "overwrite") -> None:
+    _HANDLES.pop(path, None)
     w = df.write.mode(mode)
     if partition_by:
         w = w.partitionBy(partition_by)
@@ -65,7 +117,30 @@ def write_store(df: DataFrame, path: str, partition_by: str | None = "type",
 
 
 def read_store(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.parquet(path)
+    """The store at ``path`` as this session's open handle. The handle is
+    reused while one listing of the store root (entry names, modification
+    times, lengths, ``_SUCCESS`` included) matches the listing taken when
+    it was opened; on any difference the store is reopened and the
+    handle replaced. A root without ``_SUCCESS`` is opened fresh on every
+    call. The root is listed before the store is opened, so a write that
+    lands between the two makes the next call reopen, never serve the
+    older files."""
+    sessions = _HANDLES.setdefault(path, {})
+    handle = sessions.get(spark)
+    if handle is None:
+        root = spark._jvm.org.apache.hadoop.fs.Path(path)
+        fs = root.getFileSystem(spark._jsc.hadoopConfiguration())
+    else:
+        root, fs = handle.root, handle.fs
+    state = _commit_state(fs, root)
+    if handle is not None and state == handle.state:
+        return handle.df
+    df = spark.read.parquet(path)
+    if state is None:
+        sessions.pop(spark, None)
+    else:
+        sessions[spark] = _Handle(root, fs, state, df)
+    return df
 
 
 def read_store_merged(spark: SparkSession, path: str) -> DataFrame:
@@ -73,7 +148,8 @@ def read_store_merged(spark: SparkSession, path: str) -> DataFrame:
     (columns added over time): ``mergeSchema`` unions the per-file
     footers, older files surface the new columns as NULL. The default
     ``read_store`` skips the footer union (cheaper) — use this one when
-    appends may carry new columns."""
+    appends may carry new columns. It is opened, and its footers merged,
+    on every call: no handle is kept."""
     return spark.read.option("mergeSchema", "true").parquet(path)
 
 
@@ -115,6 +191,7 @@ def compact_store(
     # A leftover _compacting dir is always a discardable partial write.
     tmp = path.rstrip("/") + "_compacting"
     old = path.rstrip("/") + "_precompact"
+    _HANDLES.pop(path, None)
     if not os.path.exists(path) and os.path.exists(old):
         os.rename(old, path)
     shutil.rmtree(tmp, ignore_errors=True)

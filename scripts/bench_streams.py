@@ -7,9 +7,10 @@ Operators (registry entries, run exactly as the oracle sweep runs them):
   q_sessionize_stream_watermarked — applyInPandasWithState sessionizer
   q_streaming_cdc_apply           — foreachBatch exactly-once CDC merge
 
-rows/s = events (or change rows) drained / end-to-end wall including
-the availableNow drain and sink. Each (operator, sf) is run ``runs``
-times; best-of is reported (shared-box drift).
+rows/s = rows of the operator's input table (events, or orders for the
+CDC apply, whose change set is drawn from orders) / end-to-end wall
+including the availableNow drain and sink. Each (operator, sf) is run
+``runs`` times; best-of is reported (shared-box drift).
 
 Output: one JSON line per (operator, sf) plus a summary JSON line —
 written to stdout and BENCH_streams_r14.json.
@@ -32,7 +33,8 @@ SFS = ["/root/testdata/sf0.01", "/root/testdata/sf0.1"]
 OPS = {
     "q_streaming_dedup_native": "events",
     "q_sessionize_stream_watermarked": "events",
-    "q_streaming_cdc_apply": "events",
+    # the CDC change set is drawn from orders (plans/queries/streams.py)
+    "q_streaming_cdc_apply": "orders",
 }
 RUNS = int(os.environ.get("BENCH_STREAM_RUNS", "3"))
 

@@ -5,13 +5,16 @@ and every audit, every reference query and both sink row counts must
 match the goldens computed in plain Python from the stream (the
 invariant classes the reference publishes in README.md:128,138). The two
 routes must also agree with each other row for row: every audit and
-query, and the raw frame and the reshaped docs themselves."""
+query, and the raw frame and the reshaped docs themselves. The store
+queries as the benchmark client composes them must give the rows of
+``pipeline.store_queries``."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
 from data_wrangle_openstreetmaps_data_spark.plans import pipeline
+from data_wrangle_openstreetmaps_data_spark.sources import json_sink
 from perfbench import corpus, workloads
 
 SEED, N_NODES, N_WAYS = 7, 2000, 400
@@ -66,3 +69,20 @@ def test_xml_and_pbf_routes_agree_row_for_row(spark, tmp_path):
     assert len(raw_xml) == len(docs_xml) == N_NODES + N_WAYS
     assert raw_xml == raw_pbf
     assert docs_xml == docs_pbf
+
+
+def test_store_queries_match_the_benchmark_client(spark, tmp_path):
+    """perfbench composes the five store queries itself; on the same
+    store they must give the rows ``pipeline.store_queries`` gives."""
+    xml = corpus.build(str(tmp_path / "xml"), SEED, N_NODES, N_WAYS,
+                       shards=2)
+    out = workloads.Paths.under(str(tmp_path / "run"))
+    workloads.build_store(spark, xml, out)
+    docs = json_sink.read_store(spark, out.store)
+    ours = {k: corpus.fingerprint(df.collect())
+            for k, df in pipeline.store_queries(docs).items()}
+    client = {k: corpus.fingerprint(q().collect())
+              for k, q in workloads._store_queries(docs).items()}
+    assert set(ours) == set(workloads.QUERIES)
+    assert ours == client
+    assert ours == {k: xml["goldens"][f"query.{k}"] for k in ours}

@@ -217,6 +217,109 @@ def test_partitioned_store_prunes(spark):
     assert 0 < n_o < n_all
 
 
+# Freshness of the store handle (json_sink.read_store): whatever rewrote
+# the store, the next read returns exactly the rows now committed there.
+DOCS_A = [(1, "node", "a"), (2, "way", "b")]
+DOCS_B = [(3, "node", "c"), (4, "way", "d"), (5, "way", "e")]
+
+
+def _docs(spark, rows):
+    return spark.createDataFrame(rows, "id long, type string, v string")
+
+
+def _rows(df) -> list[tuple]:
+    return sorted((r["id"], r["type"], r["v"]) for r in df.collect())
+
+
+def test_store_handle_is_reused_until_write_store_overwrites(spark, tmp_path):
+    p = str(tmp_path / "store")
+    json_sink.write_store(_docs(spark, DOCS_A), p)
+    first = json_sink.read_store(spark, p)
+    assert json_sink.read_store(spark, p) is first
+    assert _rows(first) == DOCS_A
+    json_sink.write_store(_docs(spark, DOCS_B), p)
+    assert _rows(json_sink.read_store(spark, p)) == DOCS_B
+
+
+def test_store_handle_sees_an_overwrite_that_bypasses_write_store(
+    spark, tmp_path
+):
+    """Same partition values before and after, so only the modification
+    times in the root listing change."""
+    p = str(tmp_path / "store")
+    json_sink.write_store(_docs(spark, DOCS_A), p)
+    assert _rows(json_sink.read_store(spark, p)) == DOCS_A
+    _docs(spark, DOCS_B).write.mode("overwrite").partitionBy("type").parquet(p)
+    assert _rows(json_sink.read_store(spark, p)) == DOCS_B
+
+
+def test_store_handle_sees_appends(spark, tmp_path):
+    p = str(tmp_path / "store")
+    json_sink.write_store(_docs(spark, DOCS_A), p)
+    assert _rows(json_sink.read_store(spark, p)) == DOCS_A
+    json_sink.write_store(_docs(spark, DOCS_B[:1]), p, mode="append")
+    assert _rows(json_sink.read_store(spark, p)) == sorted(
+        DOCS_A + DOCS_B[:1])
+    # an append outside write_store rewrites _SUCCESS and the partition
+    # directories it adds files to
+    _docs(spark, DOCS_B[1:]).write.mode("append").partitionBy("type").parquet(p)
+    assert _rows(json_sink.read_store(spark, p)) == sorted(DOCS_A + DOCS_B)
+
+
+def test_store_handle_sees_compaction(spark, tmp_path):
+    p = str(tmp_path / "flat")
+    json_sink.write_store(
+        _docs(spark, DOCS_A + DOCS_B).repartition(4), p, partition_by=None)
+    before = json_sink.read_store(spark, p)
+    assert _rows(before) == sorted(DOCS_A + DOCS_B)
+    old_files = set(before.inputFiles())
+    stats = json_sink.compact_store(spark, p, target_rows_per_file=10)
+    assert stats["files_after"] == 1 < stats["files_before"]
+    after = json_sink.read_store(spark, p)
+    assert _rows(after) == sorted(DOCS_A + DOCS_B)
+    assert old_files.isdisjoint(after.inputFiles())
+
+
+def test_store_without_success_marker_is_opened_on_every_call(spark, tmp_path):
+    p = str(tmp_path / "store")
+    json_sink.write_store(_docs(spark, DOCS_A), p)
+    cached = json_sink.read_store(spark, p)
+    os.remove(os.path.join(p, "_SUCCESS"))
+    first = json_sink.read_store(spark, p)
+    assert first is not cached
+    assert json_sink.read_store(spark, p) is not first
+    assert _rows(first) == DOCS_A
+    _docs(spark, DOCS_B).write.mode("overwrite").partitionBy("type").parquet(p)
+    os.remove(os.path.join(p, "_SUCCESS"))
+    assert _rows(json_sink.read_store(spark, p)) == DOCS_B
+
+
+def test_store_handle_is_per_session(spark, tmp_path):
+    p = str(tmp_path / "store")
+    json_sink.write_store(_docs(spark, DOCS_A), p)
+    other = spark.newSession()
+    mine = json_sink.read_store(spark, p)
+    theirs = json_sink.read_store(other, p)
+    assert theirs is not mine
+    assert mine.sparkSession is spark and theirs.sparkSession is other
+    assert json_sink.read_store(spark, p) is mine
+    assert json_sink.read_store(other, p) is theirs
+    assert _rows(theirs) == DOCS_A
+
+
+def test_merged_read_surfaces_columns_appended_after_a_handle(spark, tmp_path):
+    p = str(tmp_path / "store")
+    json_sink.write_store(_docs(spark, DOCS_A[:1]), p)
+    assert _rows(json_sink.read_store(spark, p)) == DOCS_A[:1]
+    wider = spark.createDataFrame(
+        [(2, "node", "b", 9.5)], "id long, type string, v string, score double")
+    json_sink.write_store(wider, p, mode="append")
+    merged = json_sink.read_store_merged(spark, p)
+    assert merged is not json_sink.read_store_merged(spark, p)
+    assert {r["id"]: (r["v"], r["score"]) for r in merged.collect()} == {
+        1: ("a", None), 2: ("b", 9.5)}
+
+
 def test_decontaminate_broadcasts_bench_side(spark):
     """The contamination check must stream the (huge) train side through a
     broadcast join against the (small) bench side — a sort-merge join here
