@@ -216,7 +216,7 @@ def main() -> None:
 
     total = round(sum(timings.values()), 3)
     # The driver captures a bounded TAIL of stdout and parses a JSON line
-    # from it; BENCH_r10.json recorded "parsed": null because the single
+    # from it; a round-10 run recorded "parsed": null because the single
     # full-detail line exceeded that buffer and was cut mid-JSON. Emit a
     # compact summary line FIRST (for head-parsers / humans), the full
     # per-query detail in the middle (for the repo's own round-over-round

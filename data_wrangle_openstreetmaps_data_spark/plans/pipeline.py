@@ -22,6 +22,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from data_wrangle_openstreetmaps_data_spark.functions import cleaning
 from data_wrangle_openstreetmaps_data_spark.operators import audit as audit_ops
 from data_wrangle_openstreetmaps_data_spark.operators import reshape
 from data_wrangle_openstreetmaps_data_spark.operators.reshape import shape_elements
@@ -47,6 +48,22 @@ def _tag_rows(df: DataFrame) -> DataFrame:
     )
 
 
+def _address_audits(tag_rows: DataFrame, suffix: str = "") -> dict[str, DataFrame]:
+    """The street-type and city-name audits over (type, k, v) tag rows."""
+    return {
+        f"street_types{suffix}": audit_ops.audit_street_types(
+            tag_rows.filter(F.col("k") == "addr:street").select(
+                F.col("v").alias("street")
+            )
+        ),
+        f"city_names{suffix}": audit_ops.audit_city_names(
+            tag_rows.filter(F.col("k") == "addr:city").select(
+                F.col("v").alias("city")
+            )
+        ),
+    }
+
+
 def wrangle_maps(
     spark: SparkSession,
     osm_path: str,
@@ -68,20 +85,9 @@ def wrangle_maps(
         # audit_users (:149-166)
         "users": audit_ops.audit_users(raw),
         # audit_addresses (:351-354)
-        "street_types": audit_ops.audit_street_types(
-            exploded_tags.filter(F.col("k") == "addr:street").select(
-                F.col("v").alias("street")
-            )
-        ),
-        "city_names": audit_ops.audit_city_names(
-            exploded_tags.filter(F.col("k") == "addr:city").select(
-                F.col("v").alias("city")
-            )
-        ),
+        **_address_audits(exploded_tags),
         "postcodes": audit_ops.audit_postcodes(
-            exploded_tags.filter(
-                F.col("k").startswith("addr:post") & F.col("k").endswith("code")
-            )
+            exploded_tags.filter(cleaning.is_postcode_key("k"))
         ),
     }
 
@@ -89,17 +95,7 @@ def wrangle_maps(
     # values — the reference re-parses + re-cleans; here the cleaned frame
     # is built once over the cached scan and the reshape reuses it
     cleaned = reshape.clean_tags(raw)
-    cleaned_tags = _tag_rows(cleaned)
-    audits["street_types_after_clean"] = audit_ops.audit_street_types(
-        cleaned_tags.filter(F.col("k") == "addr:street").select(
-            F.col("v").alias("street")
-        )
-    )
-    audits["city_names_after_clean"] = audit_ops.audit_city_names(
-        cleaned_tags.filter(F.col("k") == "addr:city").select(
-            F.col("v").alias("city")
-        )
-    )
+    audits.update(_address_audits(_tag_rows(cleaned), "_after_clean"))
 
     docs = shape_elements(cleaned, clean=False)
 

@@ -15,11 +15,11 @@ Spark-first replacements:
   partitions and parsed in parallel — the "event stream" becomes a
   partitioned scan with column pruning.
 
-``read_elements`` normalizes the datasource's attribute-prefixed schema to
-the engine's raw element schema (FIXTURES.md §1/§2):
-
-    id type lat lon visible version changeset timestamp user uid : string
-    tags: array<struct<k,v>>       nds: array<struct<ref>>
+``RAW_SCHEMA`` is the engine's raw-elements schema (FIXTURES.md §1/§2),
+declared here once for both ingest routes: ``read_elements`` reads every
+rowTag with one XML schema derived from it and casts the children to it,
+and the PBF route (``pbf.decode_block``, the ``osmpbf`` DataSource)
+emits its columns in it.
 """
 
 from __future__ import annotations
@@ -28,148 +28,72 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-ATTRS = ("id", "lat", "lon", "visible", "version", "changeset",
-         "timestamp", "user", "uid")
+
+def _strings(*names: str) -> T.StructType:
+    return T.StructType([T.StructField(n, T.StringType()) for n in names])
 
 
-def _xml_schema(element_type: str) -> T.StructType:
-    """Explicit read schema per rowTag. Three reasons over inference:
-    1. speed — inference is an extra full scan of every file;
-    2. determinism — inference yields `tag` as struct (not array) when no
-       row has 2 tags, bigint ids, TimestampType timestamps: all
-       data-dependent (exactly the nondeterminism SURVEY.md §1.3 warns on);
-    3. fidelity — the reference keeps ids/versions/timestamps as STRINGS
-       (golden doc openstreet_kolkata.py:541-553); an inferred Timestamp
-       would re-format them."""
-    fields = [
-        T.StructField("_id", T.StringType()),
-        T.StructField("_visible", T.StringType()),
-        T.StructField("_version", T.StringType()),
-        T.StructField("_changeset", T.StringType()),
-        T.StructField("_timestamp", T.StringType()),
-        T.StructField("_user", T.StringType()),
-        T.StructField("_uid", T.StringType()),
-        T.StructField(
-            "tag",
-            T.ArrayType(
-                T.StructType(
-                    [
-                        T.StructField("_k", T.StringType()),
-                        T.StructField("_v", T.StringType()),
-                    ]
-                )
-            ),
-        ),
+# Every value stays a string, as the reference keeps ids, versions and
+# timestamps (golden doc openstreet_kolkata.py:541-553); only ``type``,
+# which the reader sets itself, is never null.
+RAW_SCHEMA = T.StructType(
+    [
+        T.StructField("id", T.StringType()),
+        T.StructField("type", T.StringType(), nullable=False),
+        *_strings("lat", "lon", "visible", "version", "changeset",
+                  "timestamp", "user", "uid").fields,
+        T.StructField("tags", T.ArrayType(_strings("k", "v"))),
+        T.StructField("nds", T.ArrayType(_strings("ref"))),
+        T.StructField("members",
+                      T.ArrayType(_strings("mtype", "ref", "role"))),
     ]
-    if element_type == "node":
-        fields += [
-            T.StructField("_lat", T.StringType()),
-            T.StructField("_lon", T.StringType()),
-        ]
-    if element_type == "way":
-        fields.append(
-            T.StructField(
-                "nd",
-                T.ArrayType(
-                    T.StructType([T.StructField("_ref", T.StringType())])
-                ),
-            )
-        )
-    if element_type == "relation":
-        fields.append(
-            T.StructField(
-                "member",
-                T.ArrayType(
-                    T.StructType(
-                        [
-                            T.StructField("_type", T.StringType()),
-                            T.StructField("_ref", T.StringType()),
-                            T.StructField("_role", T.StringType()),
-                        ]
-                    )
-                ),
-            )
-        )
-    return T.StructType(fields)
+)
+
+# raw-elements column -> its XML child element; every other column but
+# ``type`` is an attribute of the element itself
+_CHILDREN = {"tags": "tag", "nds": "nd", "members": "member"}
 
 
-def _norm(df: DataFrame, element_type: str) -> DataFrame:
-    """Map the XML datasource's raw schema to the engine's element schema,
-    tolerating absent attributes/children (they become NULL columns)."""
-    cols = {f.name for f in df.schema.fields}
-
-    def attr(name: str):
-        raw = f"_{name}"
-        if raw in cols:
-            return F.col(raw).cast("string").alias(name)
-        return F.lit(None).cast("string").alias(name)
-
-    if "tag" in cols:
-        tags = F.transform(
-            "tag",
-            lambda t: F.struct(
-                t["_k"].cast("string").alias("k"),
-                t["_v"].cast("string").alias("v"),
-            ),
-        ).alias("tags")
-    else:
-        tags = F.lit(None).cast("array<struct<k:string,v:string>>").alias("tags")
-
-    if "nd" in cols:
-        nds = F.transform(
-            "nd", lambda n: F.struct(n["_ref"].cast("string").alias("ref"))
-        ).alias("nds")
-    else:
-        nds = F.lit(None).cast("array<struct<ref:string>>").alias("nds")
-
-    member_type = "array<struct<mtype:string,ref:string,role:string>>"
-    if "member" in cols:
-        members = F.transform(
-            "member",
-            lambda m: F.struct(
-                m["_type"].cast("string").alias("mtype"),
-                m["_ref"].cast("string").alias("ref"),
-                m["_role"].cast("string").alias("role"),
-            ),
-        ).alias("members")
-    else:
-        members = F.lit(None).cast(member_type).alias("members")
-
-    return df.select(
-        attr("id"),
-        F.lit(element_type).alias("type"),
-        *[attr(a) for a in ATTRS if a != "id"],
-        tags,
-        nds,
-        members,
-    )
+def _xml_field(f: T.StructField) -> T.StructField:
+    """The XML datasource's view of one RAW_SCHEMA field: attributes
+    carry the ``_`` prefix (a member's ``mtype`` is its ``type``
+    attribute), children keep their element name."""
+    if f.name in _CHILDREN:
+        attrs = T.StructType([_xml_field(a) for a in f.dataType.elementType])
+        return T.StructField(_CHILDREN[f.name], T.ArrayType(attrs))
+    return T.StructField("_" + {"mtype": "type"}.get(f.name, f.name),
+                         T.StringType())
 
 
-def read_elements(
-    spark: SparkSession, path: str, element_type: str,
-    infer_schema: bool = False,
-) -> DataFrame:
-    """One DataFrame per element type ('node' | 'way' | 'relation').
+# One explicit read schema for every rowTag, over inference, because
+# inference is an extra full scan, and its result is data-dependent:
+# `tag` arrives as a struct when no row has two, ids as bigint and
+# timestamps as TimestampType (SURVEY.md §1.3). Attributes a rowTag
+# lacks (a way's lat) read as null.
+_XML_SCHEMA = T.StructType(
+    [_xml_field(f) for f in RAW_SCHEMA.fields if f.name != "type"]
+)
 
-    Explicit schema by default (see ``_xml_schema``); pass
-    ``infer_schema=True`` only for exploratory reads of unknown shapes —
-    inference costs an extra full scan and its result is data-dependent
-    (a single <tag> child arrives as struct, not array)."""
-    reader = (
+
+def read_elements(spark: SparkSession, path: str,
+                  element_type: str) -> DataFrame:
+    """One raw-elements DataFrame for one rowTag ('node' | 'way' |
+    'relation'): the XML read cast to ``RAW_SCHEMA``, structs by
+    position."""
+    df = (
         spark.read.format("xml")
         .option("rowTag", element_type)
         .option("attributePrefix", "_")
+        .schema(_XML_SCHEMA)
+        .load(path)
     )
-    if not infer_schema:
-        reader = reader.schema(_xml_schema(element_type))
-    df = reader.load(path)
-    # normalize single-child structs to arrays (inference-mode quirk)
-    for child in ("tag", "nd", "member"):
-        if child in df.columns:
-            dt = dict(df.dtypes)[child]
-            if not dt.startswith("array"):
-                df = df.withColumn(child, F.array(F.col(child)))
-    return _norm(df, element_type)
+    return df.select(
+        *[
+            F.lit(element_type).alias(f.name) if f.name == "type"
+            else F.col(_xml_field(f).name).cast(f.dataType).alias(f.name)
+            for f in RAW_SCHEMA.fields
+        ]
+    )
 
 
 def write_osm_sample(df: DataFrame, path: str, row_tag: str = "node",
@@ -263,11 +187,11 @@ def read_osm(spark: SparkSession, path: str,
     node/way (openstreet_kolkata.py:153,334,466). Input may be a plain
     file/glob, a ``.bz2`` (in-scan codec), or a ``.zip`` (extract-once).
     ``.pbf`` inputs route through the ``osmpbf`` DataSource, the only
-    PBF reader: ONE planet.pbf fans out per blob instead of per file,
-    and the raw-elements schema is identical to the XML route (rows
-    pinned against the pure-Python ``pbf.decode_pbf_bytes`` in
-    tests/test_pbf_datasource.py), so every downstream consumer —
-    audits, reshape, wrangle_maps — is format-agnostic."""
+    PBF reader: ONE planet.pbf fans out per blob instead of per file.
+    Both routes return exactly ``RAW_SCHEMA`` (rows pinned against the
+    pure-Python ``pbf.decode_pbf_bytes`` in tests/test_pbf_datasource.py),
+    so every downstream consumer — audits, reshape, wrangle_maps — is
+    format-agnostic."""
     path = resolve_input(path)
     if path.endswith(".pbf"):
         from data_wrangle_openstreetmaps_data_spark.sources import (

@@ -66,89 +66,71 @@ class StringTable:
             self.strings.append(s)
         return self.index[s]
 
-    def encode(self) -> bytes:
-        return b"".join(_ld(1, s.encode()) for s in self.strings)
+
+def _info(el: dict, st: StringTable) -> bytes:
+    return (
+        _vi(1, el.get("version", 1))
+        + _vi(2, el.get("timestamp_ms", 0) // 1000)
+        + _vi(3, el.get("changeset", 0))
+        + _vi(4, el.get("uid", 0))
+        + _vi(5, st.add(el.get("user", "")))
+    )
 
 
-def encode_pbf(nodes=(), ways=(), relations=(), data_field: int = 3) -> bytes:
-    """nodes: [{id, lat, lon, user, uid, version, changeset, timestamp_ms,
-    tags: {k: v}}]; ways: [{id, refs: [...], tags, ...info}];
-    relations: [{id, members: [(type, ref, role)], tags, ...info}].
-    ``data_field`` picks the OSMData Blob payload field (``COMPRESSORS``)."""
-    st = StringTable()
-    groups = []
+def _nanodeg(deg: float) -> int:
+    return int(round(deg / 1e-9 / 100))
 
-    if nodes:
-        ids = [n["id"] for n in nodes]
-        lats = [int(round(n["lat"] / 1e-9 / 100)) for n in nodes]
-        lons = [int(round(n["lon"] / 1e-9 / 100)) for n in nodes]
-        kv = []
-        for n in nodes:
-            for k, v in n.get("tags", {}).items():
-                kv.extend([st.add(k), st.add(v)])
-            kv.append(0)
-        info = (
-            _packed(1, [n.get("version", 1) for n in nodes])
-            + _packed(2, list(_delta([n.get("timestamp_ms", 0) // 1000 for n in nodes])), signed=True)
-            + _packed(3, list(_delta([n.get("changeset", 0) for n in nodes])), signed=True)
-            + _packed(4, list(_delta([n.get("uid", 0) for n in nodes])), signed=True)
-            + _packed(5, list(_delta([st.add(n.get("user", "")) for n in nodes])), signed=True)
+
+def dense_nodes(ids, lats, lons, keys_vals=(), info: dict | None = None) -> bytes:
+    """One DenseNodes message from raw arrays (un-delta'd; lats/lons in
+    granularity units; ``info`` maps DenseInfo field number -> values,
+    delta-coded here for fields 2-5). Arrays may disagree in length, so
+    malformed blocks can be built too."""
+    body = b""
+    if info:
+        body = b"".join(
+            _packed(f, xs if f == 1 else list(_delta(xs)), signed=f > 1)
+            for f, xs in sorted(info.items())
         )
-        dense = (
-            _packed(1, list(_delta(ids)), signed=True)
-            + _ld(5, info)
-            + _packed(8, list(_delta(lats)), signed=True)
-            + _packed(9, list(_delta(lons)), signed=True)
-            + _packed(10, kv)
-        )
-        groups.append(_ld(2, _ld(2, dense)))
+    return (
+        _packed(1, list(_delta(ids)), signed=True)
+        + (_ld(5, body) if info else b"")
+        + _packed(8, list(_delta(lats)), signed=True)
+        + _packed(9, list(_delta(lons)), signed=True)
+        + _packed(10, list(keys_vals))
+    )
 
-    way_msgs = b""
-    for w in ways:
-        keys = [st.add(k) for k in w.get("tags", {})]
-        vals = [st.add(v) for v in w.get("tags", {}).values()]
-        info = (
-            _vi(1, w.get("version", 1))
-            + _vi(2, w.get("timestamp_ms", 0) // 1000)
-            + _vi(3, w.get("changeset", 0))
-            + _vi(4, w.get("uid", 0))
-            + _vi(5, st.add(w.get("user", "")))
-        )
-        msg = (
-            _vi(1, w["id"])
-            + _packed(2, keys)
-            + _packed(3, vals)
-            + _ld(4, info)
-            + _packed(8, list(_delta(w["refs"])), signed=True)
-        )
-        way_msgs += _ld(3, msg)
-    if way_msgs:
-        groups.append(_ld(2, way_msgs))
 
-    rel_msgs = b""
-    _TYPE = {"node": 0, "way": 1, "relation": 2}
-    for r in relations:
-        keys = [st.add(k) for k in r.get("tags", {})]
-        vals = [st.add(v) for v in r.get("tags", {}).values()]
-        info = _vi(1, r.get("version", 1)) + _vi(5, st.add(r.get("user", "")))
-        roles = [st.add(role) for _, _, role in r.get("members", [])]
-        memids = [ref for _, ref, _ in r.get("members", [])]
-        types = [_TYPE[t] for t, _, _ in r.get("members", [])]
-        msg = (
-            _vi(1, r["id"])
-            + _packed(2, keys)
-            + _packed(3, vals)
-            + _ld(4, info)
-            + _packed(8, roles)
-            + _packed(9, list(_delta(memids)), signed=True)
-            + _packed(10, types)
-        )
-        rel_msgs += _ld(4, msg)
-    if rel_msgs:
-        groups.append(_ld(2, rel_msgs))
+def relation_msg(rid: int, roles, memids, types, keys=(), vals=(),
+                 info: bytes = b"") -> bytes:
+    """One Relation message from raw string-table indexes and member
+    type codes (not checked, so malformed relations can be built)."""
+    return (
+        _vi(1, rid)
+        + _packed(2, list(keys))
+        + _packed(3, list(vals))
+        + (_ld(4, info) if info else b"")
+        + _packed(8, list(roles))
+        + _packed(9, list(_delta(memids)), signed=True)
+        + _packed(10, list(types))
+    )
 
-    block = _ld(1, st.encode()) + b"".join(groups)
-    # granularity/date_granularity defaults (100, 1000) — omitted
+
+def group(field: int, *msgs: bytes) -> bytes:
+    """A PrimitiveGroup payload: ``msgs`` under one field (1 Node,
+    2 DenseNodes, 3 Way, 4 Relation, 5 ChangeSet)."""
+    return b"".join(_ld(field, m) for m in msgs)
+
+
+def primitive_block(strings, groups) -> bytes:
+    """PrimitiveBlock bytes: a string table and PrimitiveGroup payloads
+    (granularity/date_granularity left at their defaults, 100 and 1000)."""
+    table = b"".join(_ld(1, s.encode()) for s in strings)
+    return _ld(1, table) + b"".join(_ld(2, g) for g in groups)
+
+
+def osm_pbf(*blocks: bytes, data_field: int = 3) -> bytes:
+    """An OSMHeader blob, then one OSMData blob per PrimitiveBlock."""
 
     def blob(btype: str, raw: bytes, field: int = 3) -> bytes:
         blob_msg = _vi(2, len(raw)) + _ld(field, COMPRESSORS[field](raw))
@@ -156,4 +138,76 @@ def encode_pbf(nodes=(), ways=(), relations=(), data_field: int = 3) -> bytes:
         return struct.pack(">I", len(header)) + header + blob_msg
 
     header_block = _ld(4, b"DenseNodes")  # required_features
-    return blob("OSMHeader", header_block) + blob("OSMData", block, data_field)
+    return blob("OSMHeader", header_block) + b"".join(
+        blob("OSMData", b, data_field) for b in blocks
+    )
+
+
+def encode_pbf(nodes=(), ways=(), relations=(), data_field: int = 3,
+               dense: bool = True) -> bytes:
+    """nodes: [{id, lat, lon, user, uid, version, changeset, timestamp_ms,
+    tags: {k: v}}]; ways: [{id, refs: [...], tags, ...info}];
+    relations: [{id, members: [(type, ref, role)], tags, ...info}].
+    ``data_field`` picks the OSMData Blob payload field (``COMPRESSORS``);
+    ``dense=False`` writes the nodes as plain Node messages."""
+    st = StringTable()
+    groups = []
+
+    if nodes and dense:
+        kv = []
+        for n in nodes:
+            for k, v in n.get("tags", {}).items():
+                kv.extend([st.add(k), st.add(v)])
+            kv.append(0)
+        info = {
+            1: [n.get("version", 1) for n in nodes],
+            2: [n.get("timestamp_ms", 0) // 1000 for n in nodes],
+            3: [n.get("changeset", 0) for n in nodes],
+            4: [n.get("uid", 0) for n in nodes],
+            5: [st.add(n.get("user", "")) for n in nodes],
+        }
+        groups.append(group(2, dense_nodes(
+            [n["id"] for n in nodes],
+            [_nanodeg(n["lat"]) for n in nodes],
+            [_nanodeg(n["lon"]) for n in nodes],
+            kv, info,
+        )))
+    elif nodes:
+        groups.append(group(1, *(
+            _vi(1, _zz(n["id"]))
+            + _packed(2, [st.add(k) for k in n.get("tags", {})])
+            + _packed(3, [st.add(v) for v in n.get("tags", {}).values()])
+            + _ld(4, _info(n, st))
+            + _vi(8, _zz(_nanodeg(n["lat"])))
+            + _vi(9, _zz(_nanodeg(n["lon"])))
+            for n in nodes
+        )))
+
+    if ways:
+        groups.append(group(3, *(
+            _vi(1, w["id"])
+            + _packed(2, [st.add(k) for k in w.get("tags", {})])
+            + _packed(3, [st.add(v) for v in w.get("tags", {}).values()])
+            + _ld(4, _info(w, st))
+            + _packed(8, list(_delta(w["refs"])), signed=True)
+            for w in ways
+        )))
+
+    rel_msgs = []
+    _TYPE = {"node": 0, "way": 1, "relation": 2}
+    for r in relations:
+        keys = [st.add(k) for k in r.get("tags", {})]
+        vals = [st.add(v) for v in r.get("tags", {}).values()]
+        info = _vi(1, r.get("version", 1)) + _vi(5, st.add(r.get("user", "")))
+        members = r.get("members", [])
+        rel_msgs.append(relation_msg(
+            r["id"],
+            [st.add(role) for _, _, role in members],
+            [ref for _, ref, _ in members],
+            [_TYPE[t] for t, _, _ in members],
+            keys, vals, info,
+        ))
+    if rel_msgs:
+        groups.append(group(4, *rel_msgs))
+
+    return osm_pbf(primitive_block(st.strings, groups), data_field=data_field)

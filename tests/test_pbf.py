@@ -10,7 +10,14 @@ import pytest
 
 from data_wrangle_openstreetmaps_data_spark.operators.reshape import shape_elements
 from data_wrangle_openstreetmaps_data_spark.sources import osm, pbf
-from tests.pbf_encoder import encode_pbf
+from tests.pbf_encoder import (
+    dense_nodes,
+    encode_pbf,
+    group,
+    osm_pbf,
+    primitive_block,
+    relation_msg,
+)
 
 TMP = os.path.join(os.path.dirname(__file__), "..", ".tmp")
 
@@ -100,6 +107,110 @@ def test_truncated_pbf_raises_clear_error(pbf_file):
     assert pbf.decode_pbf_bytes(
         encode_pbf(NODES, WAYS, RELATIONS, data_field=1)
     ) == pbf.decode_pbf_bytes(data)
+
+
+def test_plain_node_groups_decode_like_dense_nodes():
+    """PrimitiveGroup field 1 (one Node message per node) carries the
+    same nodes as DenseNodes; it used to be skipped."""
+    plain = pbf.decode_pbf_bytes(encode_pbf(NODES, WAYS, RELATIONS, dense=False))
+    dense = pbf.decode_pbf_bytes(encode_pbf(NODES, WAYS, RELATIONS))
+    assert plain == dense
+    assert [e["type"] for e in plain].count("node") == len(NODES)
+
+
+def _one_block(strings, *groups) -> bytes:
+    return osm_pbf(primitive_block(strings, groups))
+
+
+STRINGS = ["", "outer", "shop"]
+
+MALFORMED = {
+    "lat_shorter_than_ids": (
+        group(2, dense_nodes([1, 2], [10], [10, 20])),
+        "2 ids but 1 lat values",
+    ),
+    "lon_shorter_than_ids": (
+        group(2, dense_nodes([1, 2], [10, 20], [10])),
+        "2 ids but 1 lon values",
+    ),
+    "dense_info_shorter_than_ids": (
+        group(2, dense_nodes([1, 2], [10, 20], [10, 20], info={1: [1]})),
+        "2 ids but 1 version values",
+    ),
+    "more_tag_segments_than_nodes": (
+        group(2, dense_nodes([1], [10], [10], keys_vals=[2, 2, 0, 2, 2, 0])),
+        "2 tag segments for 1 nodes",
+    ),
+    "dense_tag_index_out_of_range": (
+        group(2, dense_nodes([1], [10], [10], keys_vals=[7, 2, 0])),
+        "tag string index out of range",
+    ),
+    "dense_user_index_out_of_range": (
+        group(2, dense_nodes([1], [10], [10], info={5: [9]})),
+        "user string index out of range",
+    ),
+    "unknown_member_type": (
+        group(4, relation_msg(9, roles=[1], memids=[7], types=[3])),
+        "unknown member type 3",
+    ),
+    "role_index_out_of_range": (
+        group(4, relation_msg(9, roles=[5], memids=[7], types=[1])),
+        "role string index out of range",
+    ),
+    "key_index_out_of_range": (
+        group(4, relation_msg(9, [], [], [], keys=[7], vals=[2])),
+        "key string index out of range",
+    ),
+    "value_index_out_of_range": (
+        group(4, relation_msg(9, [], [], [], keys=[2], vals=[7])),
+        "value string index out of range",
+    ),
+    "dense_tag_key_without_value": (
+        group(2, dense_nodes([1], [10], [10], keys_vals=[2, 0])),
+        "a tag key has no value",
+    ),
+    "tag_keys_without_values": (
+        group(4, relation_msg(9, [], [], [], keys=[2], vals=[])),
+        "1 tag keys, 0 values",
+    ),
+    "member_arrays_differ": (
+        group(4, relation_msg(9, roles=[1, 1], memids=[7], types=[1])),
+        "2 roles, 1 member ids, 1 member types",
+    ),
+    "changeset_group": (group(5, b""), "ChangeSet groups are not supported"),
+}
+
+
+@pytest.mark.parametrize("case", sorted(MALFORMED))
+def test_malformed_block_raises_named_error(case):
+    """Content the decoder used to pad with None, default to "node" or
+    "", or skip now raises a ValueError naming what is wrong."""
+    grp, error = MALFORMED[case]
+    with pytest.raises(ValueError, match=error):
+        pbf.decode_pbf_bytes(_one_block(STRINGS, grp))
+
+
+def test_missing_final_tag_sentinel_is_tolerated():
+    """An encoder may omit keys_vals' last 0 sentinel: no data is lost,
+    so the last node's tags decode as if it were there."""
+    rows = pbf.decode_pbf_bytes(_one_block(
+        STRINGS, group(2, dense_nodes([1, 2], [10, 20], [10, 20],
+                                      keys_vals=[2, 1, 0, 2, 1]))
+    ))
+    assert [r["tags"] for r in rows] == [[{"k": "shop", "v": "outer"}]] * 2
+
+
+def test_read_osm_schema_is_raw_schema_on_both_routes(spark, pbf_file):
+    """Both ingest routes return exactly ``osm.RAW_SCHEMA``, nullability
+    included (``type`` is never null, tag lists may hold nulls)."""
+    xml_path = os.path.join(TMP, "schema.osm")
+    with open(xml_path, "w") as f:
+        f.write('<osm><node id="1" lat="1.5" lon="2.5"><tag k="a" v="b"/>'
+                '</node><way id="2"><nd ref="1"/></way></osm>')
+    for path in (xml_path, pbf_file):
+        df = osm.read_osm(spark, path, ("node", "way", "relation"))
+        assert df.schema == osm.RAW_SCHEMA, path
+        assert df.count() >= 2
 
 
 def test_spark_read_pbf(spark, pbf_file):

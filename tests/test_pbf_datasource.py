@@ -5,6 +5,7 @@ input, one-file fan-out across partitions and blob-log streaming."""
 
 from __future__ import annotations
 
+import io
 import os
 
 import pytest
@@ -52,8 +53,8 @@ def test_index_blobs_walks_framing(single_blob_file):
     for off, ln, t in blobs:
         if t != "OSMData":
             continue
-        raw = pbf.decode_blob(data[off : off + ln])
-        rows.extend(pbf.decode_primitive_block(raw))
+        cols = pbf.decode_block(pbf.decode_blob(data[off : off + ln]))
+        rows += [dict(zip(cols, row)) for row in zip(*cols.values())]
     whole = pbf.decode_pbf_bytes(data)
     assert rows == whole
 
@@ -90,6 +91,29 @@ def test_datasource_rejects_malformed_pbf(spark):
             f.write(data)
         with pytest.raises(Exception, match=error):
             spark.read.format("osmpbf").load(path).collect()
+
+
+def test_corrupt_zlib_payload_raises(spark):
+    """Flipped bytes inside an OSMData blob's zlib_data fail both the
+    pure decoder and the DataSource read; neither returns fewer rows."""
+    pbf_datasource.register(spark)
+    data = bytearray(encode_pbf(NODES, WAYS, RELATIONS))
+    off, ln = next(
+        (off, ln)
+        for off, ln, btype in pbf.iter_blobs(io.BytesIO(bytes(data)))
+        if btype == "OSMData"
+    )
+    # the Blob is raw_size then zlib_data, so its second half is all
+    # compressed payload
+    mid = off + ln // 2
+    data[mid : mid + 4] = bytes(b ^ 0xFF for b in data[mid : mid + 4])
+    with pytest.raises(ValueError, match="corrupt PBF zlib payload"):
+        pbf.decode_pbf_bytes(bytes(data))
+    path = os.path.join(TMP, "ds_bad_zlib.osm.pbf")
+    with open(path, "wb") as f:
+        f.write(data)
+    with pytest.raises(Exception, match="corrupt PBF zlib payload"):
+        spark.read.format("osmpbf").load(path).collect()
 
 
 def test_one_file_fans_out_across_partitions(spark, multi_blob_file):
