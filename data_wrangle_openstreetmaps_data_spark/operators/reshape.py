@@ -78,7 +78,7 @@ def _entries_last_wins(entries: Column) -> Column:
     )
 
 
-def clean_tags(df: DataFrame, tags_col: str = "tags") -> DataFrame:
+def clean_tags(df: DataFrame) -> DataFrame:
     """clean_address semantics (openstreet_kolkata.py:305-326) over a tags
     array: fix the street value (type normalize + house-number split), fix
     city values, and lift an extracted house number into
@@ -92,7 +92,7 @@ def clean_tags(df: DataFrame, tags_col: str = "tags") -> DataFrame:
     is not cheap to inline, so CollapseProject keeps it a column instead
     of copying its expression into every consumer. The tags column comes
     back cleaned in place; the intermediates are dropped."""
-    tags = F.col(tags_col)
+    tags = F.col("tags")
 
     def fix_value(t: Column) -> Column:
         return F.struct(
@@ -104,7 +104,7 @@ def clean_tags(df: DataFrame, tags_col: str = "tags") -> DataFrame:
         )
 
     staged = (
-        df.withColumn(tags_col, _or_empty(tags))
+        df.withColumn("tags", _or_empty(tags))
         # last addr:street value (dict last-wins semantics; no map build,
         # so duplicate keys can't trip the session's mapKeyDedupPolicy)
         .withColumn(_STREET, F.try_element_at(
@@ -115,7 +115,7 @@ def clean_tags(df: DataFrame, tags_col: str = "tags") -> DataFrame:
         .withColumns(dict(zip(
             (_HOUSENUM, _STREET_REST), split_housenumber(F.col(_NORM_STREET))
         )))
-        .withColumn(tags_col, F.transform(tags, fix_value))
+        .withColumn("tags", F.transform(tags, fix_value))
     )
     # Lift the extracted house number: drop any pre-existing housenumber
     # entry, then append the lifted one (reference intent :318-325 —
@@ -127,27 +127,22 @@ def clean_tags(df: DataFrame, tags_col: str = "tags") -> DataFrame:
         F.struct(F.lit("addr:housenumber").alias("k"), lifted.alias("v"))
     )
     return staged.withColumn(
-        tags_col,
+        "tags",
         F.when(lifted.isNotNull(), F.concat(without_hn, hn_entry))
         .otherwise(F.concat(without_hn, existing_hn)),
     ).drop(_STREET, _NORM_STREET, _HOUSENUM, _STREET_REST)
 
 
-def shape_elements(
-    df: DataFrame,
-    clean: bool = True,
-    tags_col: str = "tags",
-    nds_col: str | None = "nds",
-) -> DataFrame:
+def shape_elements(df: DataFrame, clean: bool = True) -> DataFrame:
     """Vectorized shape_element over a raw elements DataFrame; ``clean``
     first runs :func:`clean_tags` (clean_address inside shape_element,
     :496), so the select below reads the cleaned tags as one column."""
     if clean:
         # clean_tags already replaced a null tags list with []
-        df = clean_tags(df, tags_col)
-        tags = F.col(tags_col)
+        df = clean_tags(df)
+        tags = F.col("tags")
     else:
-        tags = _or_empty(F.col(tags_col))
+        tags = _or_empty(F.col("tags"))
 
     # problemchars keys are ignored everywhere (:503-504)
     ok = F.filter(tags, lambda t: ~t["k"].rlike(PROBLEMCHARS_RE))
@@ -174,12 +169,6 @@ def shape_elements(
         F.col("lat").try_cast("double"), F.col("lon").try_cast("double")
     )
 
-    node_refs = (
-        F.transform(F.col(nds_col), lambda n: n["ref"])
-        if nds_col is not None and nds_col in df.columns
-        else F.lit(None).cast("array<string>")
-    )
-
     shaped = (
         # validity gate: node/way with a user (is_valid intent, :455-461)
         df.filter(F.col("type").isin("node", "way") & F.col("user").isNotNull())
@@ -192,7 +181,7 @@ def shape_elements(
             .alias("pos"),
             F.when(F.size(address) > 0, address).alias("address"),
             F.when(F.size(residual) > 0, residual).alias("tags"),
-            node_refs.alias("node_refs"),
+            F.transform(F.col("nds"), lambda n: n["ref"]).alias("node_refs"),
         )
     )
     return shaped

@@ -140,7 +140,6 @@ def curate_v2(
     decontam_k: int = 5,
     bench_modulus: int = 29,
     collect_stats: bool = True,
-    stage_wall: dict | None = None,
 ) -> CurationResult:
     """Round-3 curation pipeline — the data-release shape::
 
@@ -159,31 +158,17 @@ def curate_v2(
     the repetition/quality stats are doc-keyed aggregations over the
     already-reduced corpus; exact dedup is one hash groupBy; the
     decontamination join (broadcast bench shingles) runs LAST, on the
-    smallest surviving corpus.
-
-    ``stage_wall`` (optional, for scale accounting — STRESS_r09's
-    curate_e2e entry): each per-stage stats count is an action, so
-    timing it measures that stage's marginal work on top of the
-    persisted scrub prefix; wall seconds land in the dict keyed like
-    ``stats``."""
-    import time as _time
-
+    smallest surviving corpus."""
     from data_wrangle_openstreetmaps_data_spark.operators import curation
 
-    def _n(df, label=None):
-        if not collect_stats:
-            return -1
-        t0 = _time.perf_counter()
-        c = df.count()
-        if stage_wall is not None and label is not None:
-            stage_wall[label] = round(_time.perf_counter() - t0, 2)
-        return c
+    def _n(df):
+        return df.count() if collect_stats else -1
 
-    stats: dict[str, int] = {"input": _n(docs, "input")}
+    stats: dict[str, int] = {"input": _n(docs)}
 
     bench = docs.filter(F.col(id_col) % bench_modulus == 0)
     train = docs.filter(F.col(id_col) % bench_modulus != 0)
-    stats["train_split"] = _n(train, "train_split")
+    stats["train_split"] = _n(train)
 
     # PII scrub: release the scrubbed text; counts not carried forward
     scrubbed = curation.pii_scrub(train, text_col, out_col="_sc").select(
@@ -206,7 +191,7 @@ def curate_v2(
         rep.filter(F.col("dup_token_frac") <= max_dup_token_frac).select(id_col),
         id_col,
     )
-    stats["after_repetition_cut"] = _n(kept, "after_repetition_cut")
+    stats["after_repetition_cut"] = _n(kept)
 
     # per-language quality-quantile cut (keeps quality + q_rank columns)
     qf = curation.quantile_filter(
@@ -217,14 +202,14 @@ def curate_v2(
         id_col=id_col,
     ).select(F.col(id_col), "quality")
     kept = kept.join(qf, id_col)
-    stats["after_quality_quantile"] = _n(kept, "after_quality_quantile")
+    stats["after_quality_quantile"] = _n(kept)
 
     # exact dedup: min-id representative per normalized scrubbed text
     keep_exact = dedup.dedup_exact(kept, text_col, id_col).select(
         F.col("keep_id").alias(id_col)
     )
     kept = kept.join(keep_exact, id_col)
-    stats["after_exact_dedup"] = _n(kept, "after_exact_dedup")
+    stats["after_exact_dedup"] = _n(kept)
 
     # decontaminate: drop anything sharing a k-gram with the benchmark
     contaminated = (
@@ -236,7 +221,7 @@ def curate_v2(
         .dropDuplicates([id_col])
     )
     kept = kept.join(contaminated, on=id_col, how="left_anti")
-    stats["after_decontamination"] = _n(kept, "after_decontamination")
+    stats["after_decontamination"] = _n(kept)
 
     curated = kept.select(
         F.col(id_col),

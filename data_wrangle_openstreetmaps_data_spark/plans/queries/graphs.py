@@ -727,7 +727,7 @@ def q_resource_allocation_capped(spark: SparkSession, sf: str) -> DataFrame:
     the identical two-stage band+rank rule in SQL (portable md5 hash),
     so the capped graph is bit-identical cross-engine; recall vs the
     exact top-20 under a planted deg-10⁴ whale is measured in
-    STRESS_r09 (scripts/stress.py)."""
+    STRESS_r09 (by scripts/stress.py, since deleted)."""
     edges = graph.copurchase_edges(
         table(spark, sf, "lineitem"), table(spark, sf, "orders")
     ).transform(_mat)

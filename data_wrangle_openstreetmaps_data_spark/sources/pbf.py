@@ -325,9 +325,10 @@ class _Block:
 
     def way(self, buf: bytes) -> None:
         msg = _message(buf, signed=(8,))
+        # no refs is a null list, as the XML route reads a childless way
         self.element("way", msg, nds=[
             {"ref": str(r)} for r in accumulate(msg.get(8, []))
-        ])
+        ] or None)
 
     def relation(self, buf: bytes) -> None:
         msg = _message(buf, signed=(9,))
@@ -348,7 +349,7 @@ class _Block:
             for t, m, r in zip(types, accumulate(memids),
                                self.text(roles, "role"))
         ]
-        self.element("relation", msg, members=members)
+        self.element("relation", msg, members=members or None)
 
     def dense(self, buf: bytes) -> None:
         """Vectorized dense-node decode: packed varints → numpy arrays,

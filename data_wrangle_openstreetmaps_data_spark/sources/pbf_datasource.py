@@ -46,6 +46,12 @@ from data_wrangle_openstreetmaps_data_spark.sources.pbf import (
 )
 
 
+# Blobs per read task. 2, not 4: with Arrow-batch emission a blob
+# decode is pure CPU, so finer tasks win slots — warm A/B on the 560k
+# bench corpus: per=2 1.3s, per=4 1.6s full-scan wall.
+BLOBS_PER_TASK = 2
+
+
 def _open(path: str):
     return open(path, "rb")
 
@@ -68,12 +74,6 @@ class OsmPbfReader(DataSourceReader):
         self._path = options.get("path")
         if not self._path:
             raise ValueError("osmpbf: .load(path) is required")
-        # blobs per task: small fixture blobs batch up; huge planet
-        # blobs (~8 MB) get one task each by setting this to 1.
-        # Default 2 (was 4): with Arrow-batch emission a blob decode is
-        # pure CPU, so finer tasks win slots — warm A/B on the 560k
-        # bench corpus: per=2 1.3s, per=4 1.6s full-scan wall
-        self._per_task = int(options.get("blobspertask", "2"))
 
     def partitions(self) -> list[PbfBlobsPartition]:
         paths = sorted(_glob.glob(self._path)) or [self._path]
@@ -84,10 +84,10 @@ class OsmPbfReader(DataSourceReader):
                 for off, ln, btype in index_blobs(p)
                 if btype == "OSMData"
             ]
-            for i in range(0, len(data_ranges), self._per_task):
+            for i in range(0, len(data_ranges), BLOBS_PER_TASK):
                 parts.append(
                     PbfBlobsPartition(
-                        p, tuple(data_ranges[i : i + self._per_task])
+                        p, tuple(data_ranges[i : i + BLOBS_PER_TASK])
                     )
                 )
         return parts

@@ -258,3 +258,33 @@ def test_pbf_xml_format_parity(spark, pbf_file):
     assert via_xml["address"] == via_pbf["address"]
     assert via_xml["tags"] == via_pbf["tags"]
     assert via_xml["pos"] == pytest.approx(via_pbf["pos"], abs=1e-7)
+
+
+def test_childless_way_and_relation_agree_across_routes(spark):
+    """A way without refs and a relation without members read as null
+    child lists on both routes, so the rows and the shaped ``node_refs``
+    agree (PBF used to decode them as empty lists)."""
+    way = {"id": 7, "refs": [], "user": "ua", "uid": 10, "version": 1,
+           "changeset": 8, "timestamp_ms": 1357100000000,
+           "tags": {"highway": "service"}}
+    relation = {"id": 9, "user": "ua", "members": [],
+                "tags": {"type": "route"}}
+    os.makedirs(TMP, exist_ok=True)
+    pbf_path = os.path.join(TMP, "childless.osm.pbf")
+    with open(pbf_path, "wb") as f:
+        f.write(encode_pbf(ways=[way], relations=[relation]))
+    xml_path = os.path.join(TMP, "childless.osm")
+    with open(xml_path, "w") as f:
+        f.write('<osm><way id="7" user="ua" uid="10" version="1" '
+                'changeset="8" timestamp="2013-01-02T04:13:20Z">'
+                '<tag k="highway" v="service"/></way>'
+                '<relation id="9" user="ua" version="1">'
+                '<tag k="type" v="route"/></relation></osm>')
+    kinds = ("node", "way", "relation")
+    via_pbf = osm.read_osm(spark, pbf_path, kinds)
+    via_xml = osm.read_osm(spark, xml_path, kinds)
+    assert via_pbf.count() == 2
+    assert via_pbf.exceptAll(via_xml).count() == 0
+    assert via_xml.exceptAll(via_pbf).count() == 0
+    for raw in (via_pbf, via_xml):
+        assert [r["node_refs"] for r in shape_elements(raw).collect()] == [None]

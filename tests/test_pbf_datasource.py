@@ -118,13 +118,11 @@ def test_corrupt_zlib_payload_raises(spark):
 
 def test_one_file_fans_out_across_partitions(spark, multi_blob_file):
     pbf_datasource.register(spark)
-    df = (
-        spark.read.format("osmpbf")
-        .option("blobspertask", "1")
-        .load(multi_blob_file)
-    )
-    # one task per OSMData blob — the single-file parallelism claim
-    assert df.rdd.getNumPartitions() == 3
+    df = spark.read.format("osmpbf").load(multi_blob_file)
+    # BLOBS_PER_TASK OSMData blobs per task, so one 3-blob file spreads
+    # over 2 tasks — the single-file parallelism claim
+    assert pbf_datasource.BLOBS_PER_TASK == 2
+    assert df.rdd.getNumPartitions() == 2
     ids = sorted(int(r["id"]) for r in df.collect())
     want = sorted(
         n["id"] + off * 10**9 for off in range(3) for n in NODES

@@ -56,7 +56,8 @@ def test_filter_reaches_parquet_scan(spark):
 
 def test_reshape_is_narrow(spark):
     # clean+reshape must stay a zero-shuffle map stage
-    from tests.test_reshape import RAW_SCHEMA, _raw
+    from data_wrangle_openstreetmaps_data_spark.sources.osm import RAW_SCHEMA
+    from tests.test_reshape import _raw
     from data_wrangle_openstreetmaps_data_spark.operators.reshape import (
         shape_elements,
     )
@@ -71,7 +72,8 @@ def test_reshape_is_narrow(spark):
 def test_clean_is_staged_not_inlined(spark):
     # the clean step's intermediates are projected once each; inlining
     # them into every consumer grew the plan ~80x and planning by seconds
-    from tests.test_reshape import RAW_SCHEMA, _raw
+    from data_wrangle_openstreetmaps_data_spark.sources.osm import RAW_SCHEMA
+    from tests.test_reshape import _raw
     from data_wrangle_openstreetmaps_data_spark.operators.reshape import (
         shape_elements,
     )

@@ -220,7 +220,8 @@ def test_clean_reshape_matches_python_model(spark, tag_lists):
     from data_wrangle_openstreetmaps_data_spark.operators.reshape import (
         shape_elements,
     )
-    from tests.test_reshape import RAW_SCHEMA, _raw
+    from data_wrangle_openstreetmaps_data_spark.sources.osm import RAW_SCHEMA
+    from tests.test_reshape import _raw
 
     df = spark.createDataFrame(
         [_raw(id=str(i), type="node", user="u",

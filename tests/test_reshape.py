@@ -6,48 +6,16 @@ tag-shaping spec case G4 (:424-440), on synthetic raw OSM-shaped rows
 from __future__ import annotations
 
 from pyspark.sql import Row
-from pyspark.sql import types as T
 
 from data_wrangle_openstreetmaps_data_spark.operators.reshape import shape_elements
-
-RAW_SCHEMA = T.StructType(
-    [
-        T.StructField("id", T.StringType()),
-        T.StructField("type", T.StringType()),
-        T.StructField("lat", T.StringType()),
-        T.StructField("lon", T.StringType()),
-        T.StructField("visible", T.StringType()),
-        T.StructField("version", T.StringType()),
-        T.StructField("changeset", T.StringType()),
-        T.StructField("timestamp", T.StringType()),
-        T.StructField("user", T.StringType()),
-        T.StructField("uid", T.StringType()),
-        T.StructField(
-            "tags",
-            T.ArrayType(
-                T.StructType(
-                    [
-                        T.StructField("k", T.StringType()),
-                        T.StructField("v", T.StringType()),
-                    ]
-                )
-            ),
-        ),
-        T.StructField(
-            "nds",
-            T.ArrayType(
-                T.StructType([T.StructField("ref", T.StringType())])
-            ),
-        ),
-    ]
-)
+from data_wrangle_openstreetmaps_data_spark.sources.osm import RAW_SCHEMA
 
 
 def _raw(**kw):
     base = dict(
         id=None, type=None, lat=None, lon=None, visible=None, version=None,
         changeset=None, timestamp=None, user=None, uid=None, tags=None,
-        nds=None,
+        nds=None, members=None,
     )
     base.update(kw)
     return Row(**base)
