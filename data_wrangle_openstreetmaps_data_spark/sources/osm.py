@@ -1,19 +1,23 @@
-"""OSM XML source (SURVEY.md §2.1 S1/S2).
+"""OSM ingest front door and XML source (SURVEY.md §2.1 S1/S2).
 
 The reference streams OSM XML through a SAX parser one element at a time
 (ET.iterparse call sites, openstreet_kolkata.py:60,90,133,152,333,572) and
-hand-extracts .bz2 archives to disk first (find_file,
-openstreet_kolkata.py:15-35).
+resolves its input once, hand-extracting archives to disk first
+(find_file, openstreet_kolkata.py:15-35).
 
 Spark-first replacements:
-- S1 (archive handling) is a NO-OP: Hadoop codecs decompress ``.bz2``
-  transparently inside the scan, and bzip2 is a *splittable* codec, so a
-  100 TB planet file still fans out across executors. No extract step, no
-  temp copies.
+- S1 (input resolution): ``read_osm`` is the one place that decides
+  which files an input names. ``resolve_input`` extracts a ``.zip`` once
+  into a cache; ``input_files`` then turns a path, glob or directory into
+  a sorted file list with one Hadoop ``FileSystem`` walk on the driver,
+  and both readers load that list. ``.bz2`` needs no extract step:
+  Hadoop's codec decompresses it inside the scan, and bzip2 is
+  *splittable*, so a 100 TB planet file still fans out across executors.
 - S2 (streaming parse) is the native Spark 4 XML datasource
   (``spark.read.format("xml")``): the file is split into per-rowTag
   partitions and parsed in parallel — the "event stream" becomes a
-  partitioned scan with column pruning.
+  partitioned scan with column pruning. ``.pbf`` files go to the
+  ``osmpbf`` DataSource (``pbf_datasource.py``) instead.
 
 ``RAW_SCHEMA`` is the engine's raw-elements schema (FIXTURES.md §1/§2),
 declared here once for both ingest routes: ``read_elements`` reads every
@@ -75,7 +79,7 @@ _XML_SCHEMA = T.StructType(
 )
 
 
-def read_elements(spark: SparkSession, path: str,
+def read_elements(spark: SparkSession, path: str | list[str],
                   element_type: str) -> DataFrame:
     """One raw-elements DataFrame for one rowTag ('node' | 'way' |
     'relation'): the XML read cast to ``RAW_SCHEMA``, structs by
@@ -114,30 +118,22 @@ def write_osm_sample(df: DataFrame, path: str, row_tag: str = "node",
 
 
 def resolve_input(path: str, cache_dir: str | None = None) -> str:
-    """S1 — archive-aware input resolution (reference ``find_file``,
-    openstreet_kolkata.py:15-35).
-
-    ``.bz2`` (and plain files) pass through untouched: the Hadoop bzip2
-    codec decompresses inside the scan and is splittable, so there is no
-    extract step (unlike the reference's temp-file decompression).
-    ``.zip`` has no Hadoop read codec, so members are extracted ONCE into
-    a cache directory keyed by (path, mtime, size) — repeat calls reuse
-    the extraction — and the extracted directory is returned (Spark reads
-    directories natively)."""
+    """S1 — archive handling (reference ``find_file``,
+    openstreet_kolkata.py:15-35). A ``.zip`` has no Hadoop read codec, so
+    its members are extracted ONCE into a cache directory (by default
+    under the system temp directory) keyed by (path, mtime, size), and
+    the extracted directory is returned; repeat calls reuse it. Any other
+    path, ``.bz2`` included (an in-scan codec), is returned as is."""
     if not path.endswith(".zip"):
         return path
     import hashlib
     import os
+    import shutil
+    import tempfile
     import zipfile
 
     if cache_dir is None:
-        cache_dir = os.path.join(
-            os.path.dirname(
-                os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-            ),
-            ".tmp",
-            "zip_cache",
-        )
+        cache_dir = os.path.join(tempfile.gettempdir(), "osm_zip_cache")
     key = hashlib.md5(
         f"{os.path.abspath(path)}|{os.path.getmtime(path)}|"
         f"{os.path.getsize(path)}".encode()
@@ -149,9 +145,6 @@ def resolve_input(path: str, cache_dir: str | None = None) -> str:
         # concurrent resolver can never observe (or scan) a
         # partially-extracted directory — whichever rename lands first
         # wins and the loser's copy is discarded
-        import shutil
-        import tempfile
-
         os.makedirs(cache_dir, exist_ok=True)
         tmp = tempfile.mkdtemp(prefix=f".{key}.", dir=cache_dir)
         try:
@@ -180,28 +173,61 @@ def resolve_input(path: str, cache_dir: str | None = None) -> str:
     return dest
 
 
+def input_files(spark: SparkSession, path: str) -> list[str]:
+    """The sorted files a path, glob or directory names, found by one
+    Hadoop ``FileSystem`` walk on the driver: glob matches, and every
+    file under a matched directory. Entries named ``_…`` or ``.…`` are
+    skipped, as Spark's file index skips them (``_SUCCESS``, the zip
+    cache's ``.extracted`` marker). No match raises FileNotFoundError."""
+    hpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
+    stack, files = list(fs.globStatus(hpath) or []), []
+    while stack:
+        status = stack.pop()
+        if status.getPath().getName().startswith(("_", ".")):
+            continue
+        if status.isDirectory():
+            stack += fs.listStatus(status.getPath())
+        else:
+            # a local file as a plain path, which the PBF reader opens
+            files.append(status.getPath().toString().removeprefix("file:"))
+    if not files:
+        raise FileNotFoundError(f"no OSM input files match {path!r}")
+    return sorted(files)
+
+
 def read_osm(spark: SparkSession, path: str,
              element_types: tuple[str, ...] = ("node", "way")) -> DataFrame:
     """Union of all requested element types in one raw-elements DataFrame —
     the analog of the reference's single iterparse stream filtered to
-    node/way (openstreet_kolkata.py:153,334,466). Input may be a plain
-    file/glob, a ``.bz2`` (in-scan codec), or a ``.zip`` (extract-once).
-    ``.pbf`` inputs route through the ``osmpbf`` DataSource, the only
-    PBF reader: ONE planet.pbf fans out per blob instead of per file.
-    Both routes return exactly ``RAW_SCHEMA`` (rows pinned against the
-    pure-Python ``pbf.decode_pbf_bytes`` in tests/test_pbf_datasource.py),
-    so every downstream consumer — audits, reshape, wrangle_maps — is
-    format-agnostic."""
-    path = resolve_input(path)
-    if path.endswith(".pbf"):
+    node/way (openstreet_kolkata.py:153,334,466).
+
+    The one ingest front door: ``path`` (a file, glob, directory, ``.bz2``
+    or ``.zip``) is resolved once to a file list (``resolve_input``, then
+    ``input_files``), and the list picks the reader: all ``.pbf`` go to
+    the ``osmpbf`` DataSource, registered once per session (ONE
+    planet.pbf fans out per blob), no ``.pbf`` to the XML datasource, and
+    a mix raises ValueError. Both readers load that list and return
+    exactly ``RAW_SCHEMA`` (PBF rows pinned against ``pbf.decode_pbf_bytes``
+    in tests/test_pbf_datasource.py), so every downstream consumer —
+    audits, reshape, wrangle_maps — is format-agnostic."""
+    files = input_files(spark, resolve_input(path))
+    n_pbf = sum(f.endswith(".pbf") for f in files)
+    if 0 < n_pbf < len(files):
+        raise ValueError(
+            f"{path!r} names both .pbf and other files; read them apart"
+        )
+    if n_pbf:
         from data_wrangle_openstreetmaps_data_spark.sources import (
             pbf_datasource,
         )
 
-        pbf_datasource.register(spark)
-        raw = spark.read.format("osmpbf").load(path)
+        manager = spark._jsparkSession.sessionState().dataSourceManager()
+        if not manager.dataSourceExists("osmpbf"):
+            pbf_datasource.register(spark)
+        raw = spark.read.format("osmpbf").load(files)
         return raw.filter(F.col("type").isin(*element_types))
-    dfs = [read_elements(spark, path, t) for t in element_types]
+    dfs = [read_elements(spark, files, t) for t in element_types]
     out = dfs[0]
     for d in dfs[1:]:
         out = out.unionByName(d)

@@ -17,14 +17,14 @@ arrays; no protobuf dependency, which this environment doesn't ship).
 so the whole downstream engine (audits, reshape, queries) is
 format-agnostic.
 
-Framing is walked once, by ``walk_blobs`` over a seekable file, and each
+Framing is walked once, by ``iter_blobs`` over a seekable file, and each
 Blob payload is unpacked by ``decode_blob``; the pure-Python
-``decode_pbf_bytes`` and both readers of the ``osmpbf`` DataSource
+``decode_pbf_bytes`` and the reader of the ``osmpbf`` DataSource
 (``pbf_datasource.py``, ``spark.read.format("osmpbf")``, which fans one
 file out across executors by blob offset) go through them and
-``decode_block``. Malformed framing, unsupported or corrupt blob
-compression and malformed block content raise ``ValueError``; nothing
-is dropped silently.
+``decode_block``. Malformed or truncated framing, unsupported or corrupt
+blob compression and malformed block content raise ``ValueError``;
+nothing is dropped silently.
 """
 
 from __future__ import annotations
@@ -32,7 +32,7 @@ from __future__ import annotations
 import io
 import struct
 import zlib
-from collections.abc import Generator, Iterator
+from collections.abc import Iterator
 from itertools import accumulate
 from typing import BinaryIO
 
@@ -141,43 +141,37 @@ def _packed_varints_np(buf: bytes, signed: bool = False):
 BlobRange = tuple[int, int, str]  # (payload offset, payload length, blob type)
 
 
-def walk_blobs(f: BinaryIO, pos: int = 0) -> Generator[BlobRange, None, int]:
-    """Walk only the blob framing of a seekable file from ``pos``: per
-    blob, read the 4-byte header length and the BlobHeader (which
-    carries the payload size), then seek past the payload. Yields each
-    complete blob and returns the end of the last one; the walk stops at
-    a tail too short to frame a whole blob, so a half-appended blob is
-    simply not visible yet. The caller may read ``f`` between yields."""
+def iter_blobs(f: BinaryIO) -> Iterator[BlobRange]:
+    """Every blob of a whole seekable PBF file, walking only its framing:
+    per blob, read the 4-byte header length and the BlobHeader (which
+    carries the payload size), then seek past the payload. Bytes left
+    over that do not frame a complete blob raise instead of being
+    dropped. The caller may read ``f`` between yields."""
     size = f.seek(0, io.SEEK_END)
-    while pos + 4 <= size:
+    pos = 0
+
+    def need(end: int) -> None:
+        if end > size:
+            raise ValueError(
+                f"truncated PBF: {size - pos} bytes at offset {pos} do not "
+                f"frame a complete blob (file size {size})"
+            )
+
+    while pos < size:
+        need(pos + 4)
         f.seek(pos)
         (hlen,) = struct.unpack(">I", f.read(4))
-        if pos + 4 + hlen > size:
-            break
+        off = pos + 4 + hlen
+        need(off)
         btype, datasize = "", 0
         for field, _, val in _fields(f.read(hlen)):
             if field == 1:
                 btype = val.decode()
             elif field == 3:
                 datasize = val
-        off = pos + 4 + hlen
-        if off + datasize > size:
-            break
+        need(off + datasize)
         yield off, datasize, btype
         pos = off + datasize
-    return pos
-
-
-def iter_blobs(f: BinaryIO) -> Iterator[BlobRange]:
-    """Every blob of a whole PBF file; bytes left over after the last
-    complete blob raise instead of being dropped."""
-    size = f.seek(0, io.SEEK_END)
-    end = yield from walk_blobs(f)
-    if end != size:
-        raise ValueError(
-            f"truncated PBF: {size - end} bytes at offset {end} do not "
-            f"frame a complete blob (file size {size})"
-        )
 
 
 def decode_blob(blob: bytes) -> bytes:
@@ -200,9 +194,11 @@ def decode_blob(blob: bytes) -> bytes:
 # --- PrimitiveBlock decode --------------------------------------------------
 
 _MEMBER_TYPES = {0: "node", 1: "way", 2: "relation"}
-# DenseInfo field -> array; "user" holds string-table indexes
+# DenseInfo field -> array; "user" holds string-table indexes. Fields
+# 2-5 are zigzag delta-coded; 1 (version) and 6 (visible, packed bools,
+# spelled "true"/"false" as the XML attribute) are plain.
 _DENSE_INFO = {1: "version", 2: "timestamp", 3: "changeset", 4: "uid",
-               5: "user"}
+               5: "user", 6: "visible"}
 
 
 def _message(buf: bytes, signed: tuple[int, ...]) -> dict[int, object]:
@@ -315,6 +311,8 @@ class _Block:
                 values["uid"] = str(val)
             elif field == 5:
                 (values["user"],) = self.text([val], "user")
+            elif field == 6:
+                values["visible"] = "true" if val else "false"
         self.append(id=str(eid), type=etype, tags=tags or None, **values)
 
     def node(self, buf: bytes) -> None:
@@ -368,7 +366,7 @@ class _Block:
                 for f2, _, v2 in _fields(val):
                     if f2 in _DENSE_INFO:
                         info[_DENSE_INFO[f2]] = _packed_varints_np(
-                            v2, signed=f2 > 1)
+                            v2, signed=1 < f2 < 6)
             elif field == 8:
                 lats = _packed_varints_np(val, signed=True)
             elif field == 9:
@@ -392,6 +390,7 @@ class _Block:
 
         ts = info.get("timestamp")
         usid = info.get("user")
+        visible = info.get("visible")
         self.extend(
             n,
             id=np.cumsum(ids).astype("U24").tolist(),
@@ -405,6 +404,8 @@ class _Block:
             user=None if usid is None
             else self.text(np.cumsum(usid).tolist(), "user"),
             uid=strs("uid"),
+            visible=None if visible is None
+            else np.where(visible != 0, "true", "false").tolist(),
             tags=self.dense_tags(keys_vals, n),
         )
 
@@ -437,7 +438,7 @@ class _Block:
 def decode_block(raw: bytes) -> dict[str, list]:
     """One PrimitiveBlock → its elements as ``{column: values}`` in
     ``RAW_SCHEMA`` order, the one decode behind ``decode_pbf_bytes`` and
-    both ``osmpbf`` readers. Malformed content (an array shorter than
+    the ``osmpbf`` reader. Malformed content (an array shorter than
     its ids, an unknown member type, a string index outside the table, a
     ChangeSet group) raises ``ValueError``."""
     strings: list[str] = []

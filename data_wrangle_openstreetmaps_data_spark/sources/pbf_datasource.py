@@ -2,7 +2,7 @@
 
 PBF is a sequence of independently-decodable blobs, so the Spark shape
 is a custom source whose ``partitions()`` is a driver-side INDEX PASS
-over blob framing (``pbf.walk_blobs``: seek + 4-byte length + BlobHeader
+over blob framing (``pbf.iter_blobs``: seek + 4-byte length + BlobHeader
 per blob — no payload bytes are read, a few KB of I/O per ~8 MB blob)
 and whose ``read()`` decodes only its own blob ranges executor-side
 (``pbf.decode_blob``). One planet-sized file fans out across every
@@ -11,9 +11,13 @@ executor instead of landing in one task.
 Reference parity: the reference streams one element at a time through
 SAX (openstreet_kolkata.py:60,90) and never parallelizes one file; this
 source keeps its semantics at cluster scale. Its schema is
-``osm.RAW_SCHEMA``, the XML route's, and both readers (batch: one Arrow
-RecordBatch per blob; stream: rows) emit what ``pbf.decode_block``
-decodes, the same block decoder ``pbf.decode_pbf_bytes`` uses.
+``osm.RAW_SCHEMA``, the XML route's, and its reader emits one Arrow
+RecordBatch per blob of what ``pbf.decode_block`` decodes, the same
+block decoder ``pbf.decode_pbf_bytes`` uses.
+
+The source reads the files it is given (``.load(file)`` or
+``.load([files])``) and expands no globs or directories: ``osm.read_osm``
+resolves an input to its files once, on the driver, and loads that list.
 
 Environment note: the index pass and partition reads open paths through
 plain ``open()`` — local/NFS paths (this environment). A production
@@ -23,16 +27,10 @@ partition planning logic is unchanged.
 
 from __future__ import annotations
 
-import glob as _glob
+import json
 from dataclasses import dataclass
-from itertools import islice, takewhile
 
-from pyspark.sql.datasource import (
-    DataSource,
-    DataSourceReader,
-    InputPartition,
-    SimpleDataSourceStreamReader,
-)
+from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
 from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import StructType
 
@@ -42,7 +40,6 @@ from data_wrangle_openstreetmaps_data_spark.sources.pbf import (
     decode_blob,
     decode_block,
     iter_blobs,
-    walk_blobs,
 )
 
 
@@ -71,14 +68,16 @@ class PbfBlobsPartition(InputPartition):
 
 class OsmPbfReader(DataSourceReader):
     def __init__(self, options: dict):
-        self._path = options.get("path")
-        if not self._path:
+        # Spark passes one loaded path as ``path``, several as ``paths``
+        # (a JSON list)
+        paths = options.get("paths")
+        self._paths = json.loads(paths) if paths else [options.get("path")]
+        if not all(self._paths):
             raise ValueError("osmpbf: .load(path) is required")
 
     def partitions(self) -> list[PbfBlobsPartition]:
-        paths = sorted(_glob.glob(self._path)) or [self._path]
         parts: list[PbfBlobsPartition] = []
-        for p in paths:
+        for p in self._paths:
             data_ranges = [
                 (off, ln)
                 for off, ln, btype in index_blobs(p)
@@ -109,63 +108,10 @@ class OsmPbfReader(DataSourceReader):
                     yield pa.RecordBatch.from_pydict(cols, schema=schema)
 
 
-class OsmPbfStreamReader(SimpleDataSourceStreamReader):
-    """Streaming PBF ingest: the file is an append-only blob log (the
-    OSM replication-feed shape). Offsets are byte positions of the last
-    fully framed blob, so a half-appended blob is invisible until its
-    bytes complete, each micro-batch decodes only the new blobs, and
-    `readBetweenOffsets` replays any committed range bit-for-bit on
-    recovery — exactly-once composition with the checkpoint, proven in
-    tests/test_pbf_datasource.py by appending a batch and re-draining
-    against the same checkpoint."""
-
-    def __init__(self, options: dict):
-        self._path = options.get("path")
-        if not self._path:
-            raise ValueError("osmpbf: .load(path) is required")
-        # Backpressure: a Simple stream reader decodes on the DRIVER, so
-        # starting from {pos: 0} against a large pre-existing file would
-        # otherwise materialize the whole backlog in ONE micro-batch
-        # (r10 advice). Cap the blobs consumed per trigger; the offset
-        # returned is the end of the LAST blob kept, so the remaining
-        # backlog arrives over subsequent triggers with exactly-once
-        # semantics unchanged (readBetweenOffsets replays committed
-        # ranges bit-for-bit regardless of how they were batched).
-        self._max_blobs = int(options.get("maxblobspertrigger", "64"))
-
-    def initialOffset(self) -> dict:
-        return {"pos": 0}
-
-    def _rows(self, blobs) -> list[tuple]:
-        out: list[tuple] = []
-        with _open(self._path) as f:
-            for off, ln, btype in blobs:
-                if btype != "OSMData":
-                    continue
-                f.seek(off)
-                cols = decode_block(decode_blob(f.read(ln)))
-                out += zip(*cols.values())
-        return out
-
-    def read(self, start: dict):
-        cap = self._max_blobs if self._max_blobs > 0 else None
-        with _open(self._path) as f:
-            blobs = list(islice(walk_blobs(f, start["pos"]), cap))
-        next_pos = blobs[-1][0] + blobs[-1][1] if blobs else start["pos"]
-        return iter(self._rows(blobs)), {"pos": next_pos}
-
-    def readBetweenOffsets(self, start: dict, end: dict):
-        with _open(self._path) as f:
-            blobs = list(takewhile(lambda b: b[0] < end["pos"],
-                                   walk_blobs(f, start["pos"])))
-        return iter(self._rows(blobs))
-
-
 class OsmPbfDataSource(DataSource):
     """``spark.dataSource.register(OsmPbfDataSource)`` then
-    ``spark.read.format("osmpbf").load(path)`` (batch, blob fan-out)
-    or ``spark.readStream.format("osmpbf").load(path)`` (append-only
-    blob-log streaming)."""
+    ``spark.read.format("osmpbf").load(files)``: a batch read that fans
+    each file out by blob."""
 
     @classmethod
     def name(cls) -> str:
@@ -176,9 +122,6 @@ class OsmPbfDataSource(DataSource):
 
     def reader(self, schema) -> OsmPbfReader:
         return OsmPbfReader(self.options)
-
-    def simpleStreamReader(self, schema) -> OsmPbfStreamReader:
-        return OsmPbfStreamReader(self.options)
 
 
 def register(spark) -> None:

@@ -67,6 +67,11 @@ class StringTable:
         return self.index[s]
 
 
+def _visible(el: dict) -> bytes:
+    """Info field 6, written only for an element that sets ``visible``."""
+    return _vi(6, int(el["visible"])) if "visible" in el else b""
+
+
 def _info(el: dict, st: StringTable) -> bytes:
     return (
         _vi(1, el.get("version", 1))
@@ -74,6 +79,7 @@ def _info(el: dict, st: StringTable) -> bytes:
         + _vi(3, el.get("changeset", 0))
         + _vi(4, el.get("uid", 0))
         + _vi(5, st.add(el.get("user", "")))
+        + _visible(el)
     )
 
 
@@ -84,12 +90,14 @@ def _nanodeg(deg: float) -> int:
 def dense_nodes(ids, lats, lons, keys_vals=(), info: dict | None = None) -> bytes:
     """One DenseNodes message from raw arrays (un-delta'd; lats/lons in
     granularity units; ``info`` maps DenseInfo field number -> values,
-    delta-coded here for fields 2-5). Arrays may disagree in length, so
+    zigzag delta-coded here for fields 2-5; 1 (version) and 6 (visible,
+    0/1) are written as they are). Arrays may disagree in length, so
     malformed blocks can be built too."""
     body = b""
     if info:
         body = b"".join(
-            _packed(f, xs if f == 1 else list(_delta(xs)), signed=f > 1)
+            _packed(f, xs if f in (1, 6) else list(_delta(xs)),
+                    signed=1 < f < 6)
             for f, xs in sorted(info.items())
         )
     return (
@@ -147,7 +155,8 @@ def encode_pbf(nodes=(), ways=(), relations=(), data_field: int = 3,
                dense: bool = True) -> bytes:
     """nodes: [{id, lat, lon, user, uid, version, changeset, timestamp_ms,
     tags: {k: v}}]; ways: [{id, refs: [...], tags, ...info}];
-    relations: [{id, members: [(type, ref, role)], tags, ...info}].
+    relations: [{id, members: [(type, ref, role)], tags, ...info}]; any
+    element may set ``visible`` (a bool), written only where set.
     ``data_field`` picks the OSMData Blob payload field (``COMPRESSORS``);
     ``dense=False`` writes the nodes as plain Node messages."""
     st = StringTable()
@@ -166,6 +175,8 @@ def encode_pbf(nodes=(), ways=(), relations=(), data_field: int = 3,
             4: [n.get("uid", 0) for n in nodes],
             5: [st.add(n.get("user", "")) for n in nodes],
         }
+        if any("visible" in n for n in nodes):
+            info[6] = [int(n.get("visible", True)) for n in nodes]
         groups.append(group(2, dense_nodes(
             [n["id"] for n in nodes],
             [_nanodeg(n["lat"]) for n in nodes],
@@ -198,7 +209,8 @@ def encode_pbf(nodes=(), ways=(), relations=(), data_field: int = 3,
     for r in relations:
         keys = [st.add(k) for k in r.get("tags", {})]
         vals = [st.add(v) for v in r.get("tags", {}).values()]
-        info = _vi(1, r.get("version", 1)) + _vi(5, st.add(r.get("user", "")))
+        info = (_vi(1, r.get("version", 1)) + _vi(5, st.add(r.get("user", "")))
+                + _visible(r))
         members = r.get("members", [])
         rel_msgs.append(relation_msg(
             r["id"],

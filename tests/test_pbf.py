@@ -288,3 +288,41 @@ def test_childless_way_and_relation_agree_across_routes(spark):
     assert via_xml.exceptAll(via_pbf).count() == 0
     for raw in (via_pbf, via_xml):
         assert [r["node_refs"] for r in shape_elements(raw).collect()] == [None]
+
+
+@pytest.mark.parametrize("dense", [True, False], ids=["dense", "plain"])
+def test_visible_agrees_across_routes(spark, dense):
+    """Info and DenseInfo ``visible`` (field 6, history files) read as the
+    XML attribute's text on both routes, and as null where an element
+    has none (the relation)."""
+    nodes = [dict(NODES[1], visible=True), dict(NODES[1], id=3, visible=False)]
+    way = dict(WAYS[0], refs=[2, 3], visible=False)
+    relation = dict(RELATIONS[0], members=[("way", 7, "outer")])
+    os.makedirs(TMP, exist_ok=True)
+    pbf_path = os.path.join(TMP, f"visible_{dense}.osm.pbf")
+    with open(pbf_path, "wb") as f:
+        f.write(encode_pbf(nodes, [way], [relation], dense=dense))
+    node_xml = ('<node id="{}" lat="22.57" lon="88.36" user="ua" uid="10" '
+                'version="1" changeset="5" timestamp="2013-01-01T00:26:40Z" '
+                'visible="{}"><tag k="shop" v="supermarket"/>'
+                '<tag k="addr:street" v="Park st"/></node>')
+    xml_path = os.path.join(TMP, "visible.osm")
+    with open(xml_path, "w") as f:
+        f.write('<osm>' + node_xml.format(2, "true")
+                + node_xml.format(3, "false")
+                + '<way id="7" user="ua" uid="10" version="1" changeset="8" '
+                'timestamp="2013-01-02T04:13:20Z" visible="false">'
+                '<nd ref="2"/><nd ref="3"/><tag k="highway" v="service"/>'
+                '<tag k="addr:street" v="MG Rd."/></way>'
+                '<relation id="9" user="ua" version="1">'
+                '<member type="way" ref="7" role="outer"/>'
+                '<tag k="type" v="multipolygon"/></relation></osm>')
+    kinds = ("node", "way", "relation")
+    via_pbf = osm.read_osm(spark, pbf_path, kinds)
+    via_xml = osm.read_osm(spark, xml_path, kinds)
+    assert {(r["type"], r["id"]): r["visible"] for r in via_pbf.collect()} == {
+        ("node", "2"): "true", ("node", "3"): "false",
+        ("way", "7"): "false", ("relation", "9"): None,
+    }
+    assert via_pbf.exceptAll(via_xml).count() == 0
+    assert via_xml.exceptAll(via_pbf).count() == 0

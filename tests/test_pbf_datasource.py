@@ -1,7 +1,8 @@
 """osmpbf Python DataSource (sources/pbf_datasource.py), the engine's one
 PBF reader: blob-index partition planning, row parity with the
 pure-Python ``pbf.decode_pbf_bytes`` oracle, loud failure on malformed
-input, one-file fan-out across partitions and blob-log streaming."""
+input, one-file fan-out across partitions, and ``osm.read_osm``'s routing
+of PBF inputs to it."""
 
 from __future__ import annotations
 
@@ -128,100 +129,6 @@ def test_one_file_fans_out_across_partitions(spark, multi_blob_file):
         n["id"] + off * 10**9 for off in range(3) for n in NODES
     )
     assert ids == want
-
-
-def test_streaming_blob_log_incremental(spark):
-    """Append-only blob-log streaming: drain, append a blob, re-drain
-    against the SAME checkpoint — only the new blob's rows arrive
-    (offset = end of last complete blob; exactly-once with the
-    checkpoint)."""
-    import shutil
-
-    pbf_datasource.register(spark)
-    path = os.path.join(TMP, "ds_stream.osm.pbf")
-    ckpt = os.path.join(TMP, "ds_stream_ckpt")
-    out = os.path.join(TMP, "ds_stream_out")
-    for d in (ckpt, out):
-        shutil.rmtree(d, ignore_errors=True)
-    b1 = [dict(n) for n in NODES]
-    b2 = [dict(n, id=n["id"] + 5 * 10**9) for n in NODES]
-    with open(path, "wb") as f:
-        f.write(encode_pbf(b1, [], []))
-
-    def drain():
-        # parquet sink: the fault-tolerant sink the checkpoint contract
-        # needs (memory sink refuses checkpoint recovery)
-        q = (
-            spark.readStream.format("osmpbf")
-            .load(path)
-            .writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        return sorted(
-            int(r["id"]) for r in spark.read.parquet(out).collect()
-        )
-
-    assert drain() == sorted(n["id"] for n in b1)
-    with open(path, "ab") as f:
-        f.write(encode_pbf(b2, [], []))
-    # same checkpoint: the appended blob arrives, the first is NOT
-    # re-emitted — sink now holds exactly one copy of each batch
-    assert drain() == sorted(n["id"] for n in b1 + b2)
-
-
-def test_streaming_backlog_capped_per_trigger(spark):
-    """maxblobspertrigger backpressure (r10 advice): a pre-existing
-    multi-blob backlog is consumed in CAPPED micro-batches — each
-    availableNow run takes exactly one capped batch (a Simple stream
-    reader's prefetched read() IS the batch), so the 4-segment backlog
-    needs 4 runs instead of materializing whole on the driver; rows and
-    exactly-once semantics identical to the uncapped drain."""
-    import shutil
-
-    pbf_datasource.register(spark)
-    path = os.path.join(TMP, "ds_stream_cap.osm.pbf")
-    ckpt = os.path.join(TMP, "ds_stream_cap_ckpt")
-    out = os.path.join(TMP, "ds_stream_cap_out")
-    for d in (ckpt, out):
-        shutil.rmtree(d, ignore_errors=True)
-    batches = [
-        [dict(n, id=n["id"] + off * 10**9) for n in NODES]
-        for off in range(4)
-    ]
-    with open(path, "wb") as f:
-        for b in batches:
-            f.write(encode_pbf(b, [], []))
-
-    def drain_once() -> int:
-        q = (
-            spark.readStream.format("osmpbf")
-            # each segment = 1 OSMHeader + 1 OSMData blob → 2 framed
-            # blobs, so cap=2 admits exactly one segment per batch
-            .option("maxblobspertrigger", "2")
-            .load(path)
-            .writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        return sum(p["numInputRows"] for p in q.recentProgress)
-
-    per_run = []
-    for _ in range(8):
-        n = drain_once()
-        if n == 0:
-            break
-        per_run.append(n)
-    got = sorted(int(r["id"]) for r in spark.read.parquet(out).collect())
-    assert got == sorted(n["id"] for b in batches for n in b)
-    seg = len(NODES)
-    assert per_run == [seg] * 4, f"expected 4 capped batches, got {per_run}"
 
 
 def test_read_osm_dispatches_pbf_to_datasource(spark, single_blob_file):

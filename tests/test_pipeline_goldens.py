@@ -7,11 +7,12 @@ invariant classes the reference publishes in README.md:128,138). The two
 routes must also agree with each other row for row: every audit and
 query, and the raw frame and the reshaped docs themselves. The store
 queries as the benchmark client composes them must give the rows of
-``pipeline.store_queries``."""
+``pipeline.store_queries``, and the two sinks must hold the same rows."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from data_wrangle_openstreetmaps_data_spark.plans import pipeline
 from data_wrangle_openstreetmaps_data_spark.sources import json_sink
@@ -86,3 +87,33 @@ def test_store_queries_match_the_benchmark_client(spark, tmp_path):
     assert set(ours) == set(workloads.QUERIES)
     assert ours == client
     assert ours == {k: xml["goldens"][f"query.{k}"] for k in ours}
+
+
+def _comparable(df):
+    """Map columns as sorted entry arrays, since set operations refuse
+    maps."""
+    return df.select(*[
+        F.array_sort(F.map_entries(f.name)).alias(f.name)
+        if isinstance(f.dataType, T.MapType) else F.col(f.name)
+        for f in df.schema.fields
+    ])
+
+
+def test_json_sink_and_store_hold_the_same_rows(spark, tmp_path):
+    """The JSON lines read back with the store's schema equal the store
+    row for row, on both routes. Columns are matched by name: the store
+    puts its partition column ``type`` last."""
+    for route, opts in (("xml", {"shards": 2}), ("pbf", {"per_blob": 500})):
+        manifest = corpus.build(str(tmp_path / route), SEED, N_NODES,
+                                N_WAYS, **opts)
+        out = workloads.Paths.under(str(tmp_path / f"{route}_run"))
+        pipeline.wrangle_maps(spark, manifest["source"], out_json=out.json,
+                              out_store=out.store)
+        store = spark.read.parquet(out.store)
+        assert store.columns[-1] == "type"
+        json_rows = spark.read.schema(store.schema).json(out.json)
+        store, json_rows = (_comparable(df.select(*store.columns))
+                            for df in (store, json_rows))
+        assert store.count() == json_rows.count() == N_NODES + N_WAYS
+        assert store.exceptAll(json_rows).count() == 0, route
+        assert json_rows.exceptAll(store).count() == 0, route
