@@ -30,7 +30,7 @@ def _parse(path: str) -> ast.AST:
 
 
 def _package_imports(path: str):
-    """(module, name) for every package import in one script, at any
+    """(module, name) for every package import in one file, at any
     depth; ``name`` is None for a plain ``import module``."""
     for node in ast.walk(_parse(path)):
         if isinstance(node, ast.ImportFrom) and node.level == 0:
