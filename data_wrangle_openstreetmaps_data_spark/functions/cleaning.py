@@ -151,42 +151,6 @@ def fix_street_name(street: Column | str) -> tuple[Column, Column]:
     return split_housenumber(normalized)
 
 
-def normalize_street_type_join(df, street_col: str, mapping_df=None,
-                               spark=None):
-    """Broadcast-join variant of ``normalize_street_type`` for when the
-    mapping is a TABLE rather than a literal dict (millions of rows —
-    can't constant-fold). Same output; the lookup becomes a broadcast
-    hash join on the normalized token.
-
-    mapping_df schema: (norm_key string, canonical string); defaults to
-    STREET_MAPPING materialized as a DataFrame."""
-    from pyspark.sql import functions as F  # noqa: F811
-
-    if mapping_df is None:
-        spark = spark or df.sparkSession
-        mapping_df = spark.createDataFrame(
-            list(STREET_MAPPING.items()), ["norm_key", "canonical"]
-        )
-    c = F.col(street_col)
-    token = street_type(c)
-    keyed = df.withColumn("_tok", token).withColumn(
-        "_norm_key", F.lower(F.regexp_replace(F.col("_tok"), r"\.$", ""))
-    )
-    joined = keyed.join(
-        F.broadcast(mapping_df),
-        keyed["_norm_key"] == mapping_df["norm_key"],
-        "left",
-    )
-    head = c.substr(F.lit(1), F.length(c) - F.length(F.col("_tok")))
-    fixed = F.when(
-        F.col("canonical").isNotNull() & (F.col("_tok") != ""),
-        F.concat(head, F.col("canonical")),
-    ).otherwise(c)
-    return joined.withColumn(f"{street_col}_fixed", fixed).drop(
-        "_tok", "_norm_key", "norm_key", "canonical"
-    )
-
-
 # --- city cleaning -----------------------------------------------------------
 # openstreet_kolkata.py:253-259
 CITY_MAPPING: dict[str, str] = {

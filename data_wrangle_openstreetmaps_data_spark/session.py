@@ -12,6 +12,10 @@ multi-executor cluster at ~100 TB scale:
 - Broadcast threshold raised: all our dimension/lookup tables (street and
   city mappings, nation/region, query vectors) are tiny and must never
   shuffle-join.
+- The directory that holds this package is appended to the Python
+  workers' ``PYTHONPATH`` (``spark.executorEnv.PYTHONPATH``), so code the
+  workers run by reference (the PBF decoder) imports from any working
+  directory.
 """
 
 from __future__ import annotations
@@ -55,6 +59,9 @@ def get_spark(
     )
     if extra_conf:
         conf.update(extra_conf)
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    key = "spark.executorEnv.PYTHONPATH"
+    conf[key] = os.pathsep.join(filter(None, [conf.get(key), root]))
     for k, v in conf.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()

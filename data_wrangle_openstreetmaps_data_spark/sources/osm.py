@@ -16,14 +16,14 @@ Spark-first replacements:
 - S2 (streaming parse) is the native Spark 4 XML datasource
   (``spark.read.format("xml")``): the file is split into per-rowTag
   partitions and parsed in parallel — the "event stream" becomes a
-  partitioned scan with column pruning. ``.pbf`` files go to the
-  ``osmpbf`` DataSource (``pbf_datasource.py``) instead.
+  partitioned scan with column pruning. ``.pbf`` files go to
+  ``pbf.read_pbf`` instead, which fans each file out by blob.
 
 ``RAW_SCHEMA`` is the engine's raw-elements schema (FIXTURES.md §1/§2),
 declared here once for both ingest routes: ``read_elements`` reads every
 rowTag with one XML schema derived from it and casts the children to it,
-and the PBF route (``pbf.decode_block``, the ``osmpbf`` DataSource)
-emits its columns in it.
+and the PBF route (``pbf.decode_block``, under ``pbf.read_pbf``) emits
+its columns in it.
 """
 
 from __future__ import annotations
@@ -205,12 +205,13 @@ def read_osm(spark: SparkSession, path: str,
     The one ingest front door: ``path`` (a file, glob, directory, ``.bz2``
     or ``.zip``) is resolved once to a file list (``resolve_input``, then
     ``input_files``), and the list picks the reader: all ``.pbf`` go to
-    the ``osmpbf`` DataSource, registered once per session (ONE
-    planet.pbf fans out per blob), no ``.pbf`` to the XML datasource, and
-    a mix raises ValueError. Both readers load that list and return
-    exactly ``RAW_SCHEMA`` (PBF rows pinned against ``pbf.decode_pbf_bytes``
-    in tests/test_pbf_datasource.py), so every downstream consumer —
-    audits, reshape, wrangle_maps — is format-agnostic."""
+    ``pbf.read_pbf`` (ONE planet.pbf fans out per blob), no ``.pbf`` to
+    the XML datasource, and a mix raises ValueError. Both readers load
+    that list and return exactly ``RAW_SCHEMA`` (PBF rows pinned against
+    ``pbf.decode_pbf_bytes`` in tests/test_read_pbf.py), so every
+    downstream consumer — audits, reshape, wrangle_maps — is
+    format-agnostic. PBF framing that does not tile a file raises
+    ValueError here, before any job runs."""
     files = input_files(spark, resolve_input(path))
     n_pbf = sum(f.endswith(".pbf") for f in files)
     if 0 < n_pbf < len(files):
@@ -218,14 +219,9 @@ def read_osm(spark: SparkSession, path: str,
             f"{path!r} names both .pbf and other files; read them apart"
         )
     if n_pbf:
-        from data_wrangle_openstreetmaps_data_spark.sources import (
-            pbf_datasource,
-        )
+        from data_wrangle_openstreetmaps_data_spark.sources import pbf
 
-        manager = spark._jsparkSession.sessionState().dataSourceManager()
-        if not manager.dataSourceExists("osmpbf"):
-            pbf_datasource.register(spark)
-        raw = spark.read.format("osmpbf").load(files)
+        raw = pbf.read_pbf(spark, files)
         return raw.filter(F.col("type").isin(*element_types))
     dfs = [read_elements(spark, files, t) for t in element_types]
     out = dfs[0]

@@ -1,5 +1,5 @@
 """OSM PBF source: pure-decoder unit tests + Spark round-trip through
-``osm.read_osm`` (the ``osmpbf`` DataSource) + the full reshape pipeline
+``osm.read_osm`` (``pbf.read_pbf``) + the full reshape pipeline
 over PBF input (format parity with the XML path)."""
 
 from __future__ import annotations

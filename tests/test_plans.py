@@ -90,31 +90,6 @@ def test_clean_is_staged_not_inlined(spark):
     assert clean.optimizedPlan().toString().count("regexp_extract") <= 16
 
 
-def test_broadcast_mapping_join_equals_literal_form(spark):
-    from data_wrangle_openstreetmaps_data_spark.functions import cleaning
-    from data_wrangle_openstreetmaps_data_spark.plans.introspect import (
-        plan_summary,
-    )
-    from data_wrangle_openstreetmaps_data_spark.plans.queries import (
-        DIRTY_STREETS,
-    )
-
-    df = spark.createDataFrame([(s,) for s in DIRTY_STREETS], ["street"])
-    literal = {
-        r["street"]: r["out"]
-        for r in df.select(
-            "street", cleaning.normalize_street_type("street").alias("out")
-        ).collect()
-    }
-    joined_df = cleaning.normalize_street_type_join(df, "street")
-    joined = {
-        r["street"]: r["street_fixed"] for r in joined_df.collect()
-    }
-    assert literal == joined
-    s = plan_summary(joined_df)
-    assert s["broadcast_joins"] >= 1 and s["shuffles"] == 0
-
-
 def test_plan_summary_flagship(spark):
     from data_wrangle_openstreetmaps_data_spark.plans.introspect import (
         plan_summary,

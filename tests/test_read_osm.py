@@ -5,19 +5,18 @@ driver, the files pick the reader, and both readers load that list."""
 from __future__ import annotations
 
 import os
+import subprocess
+import sys
 import zipfile
 from urllib.parse import urlparse
 
 import pytest
 
-from data_wrangle_openstreetmaps_data_spark.sources import (
-    osm,
-    pbf,
-    pbf_datasource,
-)
+from data_wrangle_openstreetmaps_data_spark.sources import osm, pbf
 from tests.pbf_encoder import encode_pbf
 from tests.test_pbf import NODES, RELATIONS, WAYS
 
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 KINDS = ("node", "way", "relation")
 XML = ('<osm><node id="{0}" lat="1.5" lon="2.5" user="u" uid="1" '
        'version="1"><tag k="a" v="b"/></node>'
@@ -101,12 +100,32 @@ def test_xml_glob_and_directory_read_exactly_the_shards(spark, tmp_path):
         assert df.count() == 6
 
 
-def test_osmpbf_is_registered_once_per_session(spark, tmp_path, monkeypatch):
+def test_pbf_reads_on_a_session_that_is_not_the_active_one(spark, tmp_path):
     (data,) = _pbf_segments(1)
-    path = _write(str(tmp_path / "once.osm.pbf"), data)
-    assert osm.read_osm(spark, path).count() == 3  # registers if needed
-    calls = []
-    monkeypatch.setattr(pbf_datasource, "register", calls.append)
-    for _ in range(2):
-        assert osm.read_osm(spark, path).count() == 3
-    assert calls == []
+    path = _write(str(tmp_path / "shared.osm.pbf"), data)
+    first = _rows(osm.read_osm(spark, path, KINDS))
+    assert first == _decoded(data)
+    assert _rows(osm.read_osm(spark.newSession(), path, KINDS)) == first
+
+
+def test_pbf_read_needs_no_pythonpath_outside_the_repo_root(tmp_path):
+    """A script run from another directory, with no PYTHONPATH, that puts
+    the repo root on its own sys.path only: the Python workers that
+    decode PBF blobs must still import the package."""
+    (data,) = _pbf_segments(1)
+    path = _write(str(tmp_path / "one.osm.pbf"), data)
+    script = (
+        f"import sys; sys.path.insert(0, {ROOT!r})\n"
+        "from data_wrangle_openstreetmaps_data_spark.session import get_spark\n"
+        "from data_wrangle_openstreetmaps_data_spark.sources import osm\n"
+        "spark = get_spark('outside', master='local[1]', shuffle_partitions=1)\n"
+        f"print('rows', osm.read_osm(spark, {path!r}).count())\n"
+        "spark.stop()\n"
+    )
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env["SPARK_GRAFT_DRIVER_MEM"] = "1g"
+    out = subprocess.run([sys.executable, "-c", script], cwd=tmp_path,
+                         env=env, capture_output=True, text=True, timeout=600)
+    assert out.returncode == 0, out.stderr[-3000:]
+    want = sum(e["type"] in ("node", "way") for e in pbf.decode_pbf_bytes(data))
+    assert f"rows {want}" in out.stdout.splitlines()
