@@ -1,8 +1,8 @@
-"""The PBF route of ``osm.read_osm`` (``pbf.read_pbf``): row parity with
-the pure-Python ``pbf.decode_pbf_bytes`` oracle, one-file fan-out across
-partitions, the blob index the driver builds, and loud failure on
+"""The PBF route of ``osm.read_osm`` (``pbf.read_pbf``): one-file fan-out
+across partitions, the blob index the driver builds, and loud failure on
 malformed input — framing on the driver at the call, blob payloads at
-the action."""
+the action. Row parity with the ``pbf.decode_pbf_bytes`` oracle is in
+``tests/test_pbf_datasource.py``."""
 
 from __future__ import annotations
 
@@ -57,19 +57,6 @@ def test_iter_blobs_offsets_tile_the_file(single_blob_file):
         cols = pbf.decode_block(pbf.decode_blob(data[off : off + ln]))
         rows += [dict(zip(cols, row)) for row in zip(*cols.values())]
     assert rows == pbf.decode_pbf_bytes(data)
-
-
-def test_read_osm_parity_with_pure_decoder(spark, single_blob_file):
-    with open(single_blob_file, "rb") as f:
-        ref = sorted(pbf.decode_pbf_bytes(f.read()),
-                     key=lambda e: (e["type"], e["id"]))
-    got = osm.read_osm(spark, single_blob_file, KINDS).orderBy("type", "id")
-    assert [r.asDict(recursive=True) for r in got.collect()] == ref
-    # the default element types keep nodes and ways only
-    default = osm.read_osm(spark, single_blob_file).orderBy("type", "id")
-    assert [r.asDict(recursive=True) for r in default.collect()] == [
-        e for e in ref if e["type"] in ("node", "way")
-    ]
 
 
 def test_one_file_fans_out_across_partitions(spark, multi_blob_file):
