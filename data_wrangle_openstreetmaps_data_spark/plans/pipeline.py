@@ -8,8 +8,11 @@ time Mongo inserts and server-side query pipelines (SURVEY.md §3.1).
 Spark shape: ONE cached raw-elements DataFrame feeds every audit. The
 clean step is a few narrow projections (``clean_tags``), built once and
 shared by the post-clean audits and the reshape; the reshape is one
-narrow ``select`` over the cleaned tags (no shuffle). Sinks are bulk
-writes; queries are DataFrame aggregations on the reshaped store.
+narrow ``select`` over the cleaned tags (no shuffle), planned only when
+a sink is written or the caller reads ``docs``, as the reference
+reshapes only when it writes. Sinks are bulk writes; queries are
+DataFrame aggregations on the reshaped store, planned on the same
+terms.
 ``df.cache()`` replaces the 6-scan pattern — at 100 TB you'd swap
 cache() for a persisted bronze table, which is the same plan with a
 different storage level.
@@ -17,7 +20,8 @@ different storage level.
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
+from functools import cached_property
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -32,12 +36,25 @@ from data_wrangle_openstreetmaps_data_spark.sources import json_sink, osm
 
 @dataclass
 class WrangleResult:
-    """DataFrames for every phase output; all lazy except the cached source."""
+    """What one wrangle built: the cached source, the audits, and the
+    cleaned frame both sit on. ``docs`` and ``queries`` are planned on
+    first read, at most once each, so an audit-only wrangle plans no
+    reshape and no query."""
 
     raw: DataFrame
-    docs: DataFrame
-    audits: dict[str, DataFrame] = field(default_factory=dict)
-    queries: dict[str, DataFrame] = field(default_factory=dict)
+    audits: dict[str, DataFrame]
+    cleaned: DataFrame
+
+    @cached_property
+    def docs(self) -> DataFrame:
+        """The reshaped documents: one narrow select over ``cleaned``."""
+        return shape_elements(self.cleaned, clean=False)
+
+    @cached_property
+    def queries(self) -> dict[str, DataFrame]:
+        """The five store queries over ``docs``; ``wrangle_maps`` sets
+        them over the store when it writes one."""
+        return store_queries(self.docs)
 
 
 def _tag_rows(df: DataFrame) -> DataFrame:
@@ -70,7 +87,9 @@ def wrangle_maps(
     out_json: str | None = None,
     out_store: str | None = None,
 ) -> WrangleResult:
-    """audit → clean+reshape → sink → query, one cached scan."""
+    """audit → clean+reshape → sink → query, one cached scan. Without a
+    sink only the audits are planned; the reshape and the queries wait
+    for the first read of ``docs`` or ``queries``."""
     raw = osm.read_osm(spark, osm_path).cache()
 
     exploded_tags = _tag_rows(raw)
@@ -97,23 +116,20 @@ def wrangle_maps(
     cleaned = reshape.clean_tags(raw)
     audits.update(_address_audits(_tag_rows(cleaned), "_after_clean"))
 
-    docs = shape_elements(cleaned, clean=False)
-
+    res = WrangleResult(raw=raw, audits=audits, cleaned=cleaned)
     if out_json:
-        json_sink.write_json(docs, out_json)
+        json_sink.write_json(res.docs, out_json)
     if out_store:
-        json_sink.write_store(docs, out_store)
-
-    # Query the MATERIALIZED store when one was written: each query is
-    # then a pruned parquet scan (+ partition pruning on type) instead of
-    # re-evaluating the clean+reshape expressions over the cached raw per
-    # query — measured 15.1s → 1.4s for the 5-query reference set at the
-    # 560k-doc pipeline scale (PERF.md). This is also the production
-    # shape: analytics read the silver table, not the ingest expression.
-    docs_q = json_sink.read_store(spark, out_store) if out_store else docs
-
-    return WrangleResult(raw=raw, docs=docs, audits=audits,
-                         queries=store_queries(docs_q))
+        json_sink.write_store(res.docs, out_store)
+        # Query the MATERIALIZED store, as listed right after this write:
+        # each query is then a pruned parquet scan (+ partition pruning on
+        # type) instead of re-evaluating the clean+reshape expressions
+        # over the cached raw per query — measured 15.1s → 1.4s for the
+        # 5-query reference set at the 560k-doc pipeline scale (PERF.md).
+        # This is also the production shape: analytics read the silver
+        # table, not the ingest expression.
+        res.queries = store_queries(json_sink.read_store(spark, out_store))
+    return res
 
 
 def store_queries(docs: DataFrame) -> dict[str, DataFrame]:

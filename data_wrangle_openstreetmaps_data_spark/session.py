@@ -13,9 +13,10 @@ multi-executor cluster at ~100 TB scale:
   city mappings, nation/region, query vectors) are tiny and must never
   shuffle-join.
 - The directory that holds this package is appended to the Python
-  workers' ``PYTHONPATH`` (``spark.executorEnv.PYTHONPATH``), so code the
-  workers run by reference (the PBF decoder) imports from any working
-  directory.
+  workers' ``PYTHONPATH`` (``spark.executorEnv.PYTHONPATH``), so the
+  package's Python UDFs, which the workers import by reference, run from
+  any working directory. (The PBF decoder ships by value and needs no
+  such path.)
 """
 
 from __future__ import annotations

@@ -205,11 +205,11 @@ def read_osm(spark: SparkSession, path: str,
     The one ingest front door: ``path`` (a file, glob, directory, ``.bz2``
     or ``.zip``) is resolved once to a file list (``resolve_input``, then
     ``input_files``), and the list picks the reader: all ``.pbf`` go to
-    ``pbf.read_pbf`` (ONE planet.pbf fans out per blob), no ``.pbf`` to
-    the XML datasource, and a mix raises ValueError. Both readers load
-    that list and return exactly ``RAW_SCHEMA`` (PBF rows pinned against
-    ``pbf.decode_pbf_bytes`` in tests/test_read_pbf.py), so every
-    downstream consumer — audits, reshape, wrangle_maps — is
+    ``pbf.read_pbf`` (ONE planet.pbf fans out across tasks by blob), no
+    ``.pbf`` to the XML datasource, and a mix raises ValueError. Both
+    readers load that list and return exactly ``RAW_SCHEMA`` (PBF rows
+    pinned against ``pbf.decode_pbf_bytes`` in tests/test_read_pbf.py),
+    so every downstream consumer — audits, reshape, wrangle_maps — is
     format-agnostic. PBF framing that does not tile a file raises
     ValueError here, before any job runs."""
     files = input_files(spark, resolve_input(path))

@@ -21,8 +21,10 @@ Framing is walked once, by ``iter_blobs`` over a seekable file, and each
 Blob payload is unpacked by ``decode_blob``; the pure-Python
 ``decode_pbf_bytes`` and the Spark reader ``read_pbf`` go through them
 and ``decode_block``. ``read_pbf`` indexes the blobs on the driver
-(framing only, no payload bytes) and decodes them in one ``mapInArrow``,
-so one planet-sized file fans out across executors by blob offset.
+(framing only, no payload bytes), packs them by compressed bytes into
+about one task per core (``plan_tasks``) and decodes them in one
+``mapInArrow``, so one planet-sized file fans out across executors by
+blob offset.
 Malformed or truncated framing, unsupported or corrupt blob compression
 and malformed block content raise ``ValueError``; nothing is dropped
 silently.
@@ -32,15 +34,24 @@ from __future__ import annotations
 
 import io
 import struct
+import sys
 import zlib
+from bisect import bisect_right
 from collections.abc import Iterator
-from itertools import accumulate
+from itertools import accumulate, groupby
+from operator import itemgetter
 from typing import BinaryIO
 
+from pyspark import cloudpickle
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.pandas.types import to_arrow_schema
 
 from data_wrangle_openstreetmaps_data_spark.sources.osm import RAW_SCHEMA
+
+# ``read_pbf``'s decoder and everything it calls here ship to the Python
+# workers by value, so the workers need not import this package: the PBF
+# route runs on any session, whatever the workers' PYTHONPATH.
+cloudpickle.register_pickle_by_value(sys.modules[__name__])
 
 # --- protobuf wire format (decode) -----------------------------------------
 
@@ -493,26 +504,66 @@ def decode_pbf_bytes(data: bytes) -> list[dict]:
 
 # --- Spark read -------------------------------------------------------------
 
-# Blobs per read task. 2, not 4: with Arrow-batch emission a blob
-# decode is pure CPU, so finer tasks win slots — warm A/B on the 560k
-# bench corpus: per=2 1.3s, per=4 1.6s full-scan wall.
-BLOBS_PER_TASK = 2
+
+def plan_tasks(sizes: list[int], n: int) -> list[tuple[int, int]]:
+    """The ``(start, stop)`` blob ranges of ``n`` tasks of consecutive
+    blobs, given each blob's compressed size in file order (``1 <= n <=
+    len(sizes)``). Every task holds ``lo`` to ``lo + w`` bytes, ``w`` the
+    largest blob, for the smallest ``lo`` at which ``n`` such tasks reach
+    the last blob: no task is empty, and the largest exceeds the smallest
+    by at most one blob."""
+    if not n:
+        return []
+    weights = [max(s, 1) for s in sizes]
+    cum = list(accumulate(weights, initial=0))
+    last, w = len(weights), max(weights)
+
+    def furthest(lo: int) -> list[int]:
+        # [k]: the furthest blob boundary k tasks of at most lo + w reach
+        ends = [0]
+        for _ in range(n):
+            ends.append(bisect_right(cum, cum[ends[-1]] + lo + w) - 1)
+        return ends
+
+    lo, hi = 1, cum[-1]
+    while lo < hi:
+        mid = (lo + hi) // 2
+        if furthest(mid)[-1] == last:
+            hi = mid
+        else:
+            lo = mid + 1
+    # Walk back from the last blob. Boundaries are at most w apart, so
+    # every boundary up to far[k] that k tasks of lo..lo+w can reach at
+    # all is one they end at, and some such boundary lies lo..lo+w back.
+    far = furthest(lo)
+    cuts = [last]
+    for k in range(n - 1, 0, -1):
+        cuts.append(min(far[k], bisect_right(cum, cum[cuts[-1]] - lo) - 1))
+    cuts.append(0)
+    cuts.reverse()
+    return list(zip(cuts, cuts[1:]))
 
 
 def read_pbf(spark: SparkSession, files: list[str]) -> DataFrame:
     """Every element of ``files`` (local ``.pbf`` paths) in
-    ``RAW_SCHEMA``. The driver walks each file's framing and groups its
-    OSMData blobs into tasks of ``BLOBS_PER_TASK``; task *i* of one
-    ``mapInArrow`` decodes its blobs and yields one Arrow batch per blob.
-    Framing that does not tile a file raises here, before any job runs;
-    a bad blob payload fails the action that decodes it."""
-    tasks: list[tuple[str, list[tuple[int, int]]]] = []
+    ``RAW_SCHEMA``. The driver walks each file's framing and packs the
+    OSMData blobs of all files, in order, into one task per core, or one
+    per ``spark.sql.files.maxPartitionBytes`` of compressed bytes if
+    that gives more, but never more tasks than blobs (``plan_tasks``).
+    Task *i* of one ``mapInArrow`` decodes its blobs and yields one
+    Arrow batch per blob. Framing that does not tile a file raises here,
+    before any job runs; a bad blob payload fails the action that
+    decodes it."""
+    blobs: list[tuple[str, int, int]] = []
     for path in files:
         with open(path, "rb") as f:
-            ranges = [(off, ln) for off, ln, btype in iter_blobs(f)
+            blobs += [(path, off, ln) for off, ln, btype in iter_blobs(f)
                       if btype == "OSMData"]
-        tasks += [(path, ranges[i:i + BLOBS_PER_TASK])
-                  for i in range(0, len(ranges), BLOBS_PER_TASK)]
+    sizes = [ln for _, _, ln in blobs]
+    split = spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
+    n = min(len(blobs), max(spark.sparkContext.defaultParallelism,
+                            -(-sum(sizes) // split)))
+    tasks = [blobs[a:b] for a, b in plan_tasks(sizes, n)]
 
     schema = to_arrow_schema(RAW_SCHEMA)
 
@@ -521,13 +572,13 @@ def read_pbf(spark: SparkSession, files: list[str]) -> DataFrame:
 
         for batch in batches:
             for i in batch.column("id").to_pylist():
-                path, ranges = tasks[i]
-                with open(path, "rb") as f:
-                    for off, ln in ranges:
-                        f.seek(off)
-                        cols = decode_block(decode_blob(f.read(ln)))
-                        if cols["id"]:
-                            yield pa.RecordBatch.from_pydict(cols, schema=schema)
+                for path, run in groupby(tasks[i], key=itemgetter(0)):
+                    with open(path, "rb") as f:
+                        for _, off, ln in run:
+                            f.seek(off)
+                            cols = decode_block(decode_blob(f.read(ln)))
+                            if cols["id"]:
+                                yield pa.RecordBatch.from_pydict(
+                                    cols, schema=schema)
 
-    n = len(tasks)
     return spark.range(0, n, 1, n).mapInArrow(decode, RAW_SCHEMA)

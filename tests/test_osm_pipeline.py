@@ -145,8 +145,9 @@ def test_wrangle_pipeline_end_to_end(spark, osm_file):
 
 def test_reshape_is_built_once_over_the_cleaned_frame(spark, osm_file,
                                                      monkeypatch):
-    # one wrangle plans the reshape once, over the frame the post-clean
-    # audits already cleaned, with or without sinks
+    # one wrangle plans the reshape at most once, over the frame the
+    # post-clean audits already cleaned: without sinks only when docs or
+    # queries are first read, with sinks at the call
     from data_wrangle_openstreetmaps_data_spark.plans import pipeline
 
     calls = []
@@ -159,9 +160,19 @@ def test_reshape_is_built_once_over_the_cleaned_frame(spark, osm_file,
     monkeypatch.setattr(pipeline, "shape_elements", counting)
 
     res = wrangle_maps(spark, osm_file)
-    assert calls == [False]
+    for df in res.audits.values():
+        df.collect()
+    assert calls == []
     assert res.docs.count() == 6
+    assert calls == [False]
+    assert res.docs is res.docs
     assert res.queries["unique_users"].first()["cnt"] == 4
+    assert calls == [False]
+
+    calls.clear()
+    res = wrangle_maps(spark, osm_file)
+    assert res.queries["unique_users"].first()["cnt"] == 4
+    assert res.docs.count() == 6
     assert calls == [False]
 
     calls.clear()

@@ -129,3 +129,26 @@ def test_pbf_read_needs_no_pythonpath_outside_the_repo_root(tmp_path):
     assert out.returncode == 0, out.stderr[-3000:]
     want = sum(e["type"] in ("node", "way") for e in pbf.decode_pbf_bytes(data))
     assert f"rows {want}" in out.stdout.splitlines()
+
+
+def test_pbf_reads_on_a_plain_session_outside_the_repo_root(tmp_path):
+    """The same script on a session built straight from
+    ``SparkSession.builder``, so no engine config puts the package on the
+    workers' PYTHONPATH: the PBF decoder still runs, shipped by value."""
+    (data,) = _pbf_segments(1)
+    path = _write(str(tmp_path / "one.osm.pbf"), data)
+    script = (
+        f"import sys; sys.path.insert(0, {ROOT!r})\n"
+        "from pyspark.sql import SparkSession\n"
+        "from data_wrangle_openstreetmaps_data_spark.sources import osm\n"
+        "spark = (SparkSession.builder.master('local[2]')\n"
+        "         .config('spark.ui.enabled', 'false').getOrCreate())\n"
+        f"print('rows', osm.read_osm(spark, {path!r}).count())\n"
+        "spark.stop()\n"
+    )
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    out = subprocess.run([sys.executable, "-c", script], cwd=tmp_path,
+                         env=env, capture_output=True, text=True, timeout=600)
+    assert out.returncode == 0, out.stderr[-3000:]
+    want = sum(e["type"] in ("node", "way") for e in pbf.decode_pbf_bytes(data))
+    assert f"rows {want}" in out.stdout.splitlines()
